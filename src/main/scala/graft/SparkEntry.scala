@@ -8,6 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each `queries` entry is an implemented operator from SURVEY.md §2 (or the
@@ -21,110 +24,99 @@ object SparkEntry {
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
-  /** Ephemeral per-invocation scratch (pipeline checkpoint dirs, staging
-    * parquet for the streaming twins): a fresh unique dir per call with NO
-    * reuse across invocations — every bench/oracle run recomputes from the
-    * parquet inputs. Placed on tmpfs when present (JVM temp otherwise,
-    * removed on exit) for the same reason as the streaming twins'
-    * ephemeral checkpoints: this state has no durability contract, so its
-    * many small parquet + commit-marker writes belong on the fastest
-    * ephemeral storage (guide §6). Production pipelines pass caller-owned
-    * durable checkpoint locations and are untouched. */
-  private lazy val scratchBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base, "graft-scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rm(_))
-        java.nio.file.Files.deleteIfExists(p)
+  /** Static resource fixture `/graft/<name>` copied to scratch once per
+    * JVM; returns the copy's path. The streaming sentinels are CONSTANTS of
+    * their query definitions, so they ship as resources instead of paying
+    * a one-row Spark write job on every fresh-JVM leg. */
+  private val resourceCopies = new java.util.concurrent.ConcurrentHashMap[String, Path]()
+  private def resourceFile(name: String): Path =
+    resourceCopies.computeIfAbsent(name, { _ =>
+      val in = getClass.getResourceAsStream(s"/graft/$name")
+      require(in != null, s"missing resource /graft/$name")
+      val p = Paths.get(Scratch.dir("res"), name)
+      try Files.copy(in, p) finally in.close()
+      p
+    })
+
+  /** The file stream source needs a directory; the testdata tables are
+    * single parquet files. Stage `table`'s part file(s) AND the sentinel
+    * in ONE fresh scratch directory via symlinks — zero copy, no staging
+    * rewrite, one file source. Corpus links carry a `part-` prefix so no
+    * part name can collide with the unprefixed sentinel link. Hidden
+    * entries (`_`/`.` prefix) are skipped as Spark's own reader skips them;
+    * a visible subdirectory (a partitioned or nested layout) or a table
+    * with no part file fails loudly instead of streaming an empty corpus. */
+  private def stageWithSentinel(sfDir: String, table: String, sentinelPath: Path): String = {
+    // absolute target: a relative sfDir would store a relative link that
+    // the OS resolves against the scratch dir — a dangling symlink
+    val target = Paths.get(t(sfDir, table)).toAbsolutePath
+    val parts =
+      if (!Files.isDirectory(target)) Seq(target)
+      else {
+        val ls = Files.list(target)
+        val visible = try ls.iterator.asScala.toVector.filterNot { p =>
+          val n = p.getFileName.toString
+          n.startsWith("_") || n.startsWith(".")
+        } finally ls.close()
+        visible.find(Files.isDirectory(_)).foreach { d =>
+          throw new IllegalArgumentException(
+            s"$target: subdirectory ${d.getFileName} is not supported; stage a flat table")
+        }
+        visible.filter(_.getFileName.toString.endsWith(".parquet"))
       }
-      try rm(dir) catch { case _: Throwable => () }
-    }))
+    require(parts.nonEmpty, s"$target: no parquet part file to stream")
+    val dir = Scratch.dir(s"${table}stage")
+    for (p <- parts) Files.createSymbolicLink(Paths.get(dir, s"part-${p.getFileName}"), p)
+    Files.createSymbolicLink(Paths.get(dir, "sentinel.parquet"), sentinelPath)
     dir
   }
-  private def scratchDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(scratchBase, prefix).toString
 
-  /** One-row watermark-flush sentinel for q31 (doc_id = -1, empty text).
-    * The row is a CONSTANT of the query definition — it derives from
-    * nothing in the input — so it ships as a static resource fixture
-    * (src/main/resources/graft/q31-sentinel.parquet) extracted to scratch
-    * once per JVM, instead of paying a one-row Spark write job on every
-    * fresh-JVM leg. */
-  private val q31Sentinel = new java.util.concurrent.atomic.AtomicReference[String]()
-  private def q31SentinelDir(s: SparkSession): String = {
-    if (q31Sentinel.get() == null) q31Sentinel.synchronized {
-      if (q31Sentinel.get() == null) {
-        val dir = scratchDir("q31sentinel")
-        val in = getClass.getResourceAsStream("/graft/q31-sentinel.parquet")
-        require(in != null, "missing resource /graft/q31-sentinel.parquet")
-        try java.nio.file.Files.copy(in,
-          java.nio.file.Paths.get(dir, "sentinel.parquet"))
-        finally in.close()
-        q31Sentinel.set(dir)
-      }
-    }
-    q31Sentinel.get()
-  }
+  /** q31 staging: the documents table plus the constant one-row flush
+    * sentinel (doc_id = -1, empty text), memoized per (JVM, sfDir). */
+  private val q31StageDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def q31StageDir(sfDir: String): String =
+    q31StageDirs.computeIfAbsent(sfDir,
+      _ => stageWithSentinel(sfDir, "documents", resourceFile("q31-sentinel.parquet")))
 
   /** q33 staging: events + a far-future sentinel row (user_id = -1) that
     * advances the watermark so every open session times out and flushes —
-    * built once per (JVM, sfDir). The events table itself is SYMLINKED
-    * into the stream directory (zero copy — the old staging rewrote the
-    * whole table coalesce(1), a ~1 s single-task write per fresh JVM);
-    * only the one-row sentinel is provided.
+    * built once per (JVM, sfDir).
     *
-    * Sentinel ts must provably exceed every session's end + gap. The old
-    * staging derived it as max(ts) + 365 days via an aggregation job plus
-    * a one-row parquet write (~1.1 s first-invocation, measured). Now the
+    * Sentinel ts must provably exceed every session's end + gap. The
     * driver reads max(ts) from the events file's parquet FOOTER statistics
     * (~10 ms — the same column stats predicate pushdown trusts) and, when
     * the committed year-3000 sentinel fixture
     * (src/main/resources/graft/q33-sentinel.parquet, schema byte-matched
-    * to the old dynamic write: INT64 TIMESTAMP(MICROS,false)) clears
-    * max(ts) by > 366 days, symlinks that instead — no Spark job at all.
-    * Any mismatch (multi-file table, non-NTZ-micros ts, missing stats, or
-    * events within 366 days of year 3000) falls back to the exact old
-    * agg + write staging. Session output is invariant to the sentinel's
-    * ts value once it is past every session end + gap: all open sessions
-    * time out in the flush batch either way, and the sentinel user's own
-    * row is filtered by the reader (user_id >= 0). */
+    * to the dynamic write: INT64 TIMESTAMP(MICROS,false)) clears max(ts)
+    * by > 366 days, stages that — no Spark job at all. Any mismatch
+    * (multi-file table, non-NTZ-micros ts, missing stats, or events within
+    * 366 days of year 3000) falls back to the dynamic staging: an
+    * aggregation job writes max(ts) + 365 days as a one-row parquet.
+    * Session output is invariant to the sentinel's ts value once it is
+    * past every session end + gap: all open sessions time out in the flush
+    * batch either way, and the sentinel user's own row is filtered by the
+    * reader (user_id >= 0). */
   private val q33Dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val Year3000Micros = 32503680000000000L // 3000-01-01T00:00:00 (NTZ micros)
   private def q33EventsDir(s: SparkSession, sfDir: String): String =
     q33Dirs.computeIfAbsent(sfDir, { _ =>
-      val dir = scratchDir("q33events")
       val marginMicros = 366L * 24 * 3600 * 1000000L
-      val sentinelPart: java.nio.file.Path = footerMaxTsMicros(s, t(sfDir, "events")) match {
-        case Some(maxTs) if maxTs + marginMicros < Year3000Micros =>
-          val sentDir = scratchDir("q33sentinel")
-          val in = getClass.getResourceAsStream("/graft/q33-sentinel.parquet")
-          require(in != null, "missing resource /graft/q33-sentinel.parquet")
-          val p = java.nio.file.Paths.get(sentDir, "sentinel.parquet")
-          try java.nio.file.Files.copy(in, p) finally in.close()
-          p
+      val sentinel = footerMaxTsMicros(s, t(sfDir, "events")) match {
+        // subtract from the constant: maxTs + margin can overflow Long
+        case Some(maxTs) if maxTs < Year3000Micros - marginMicros =>
+          resourceFile("q33-sentinel.parquet")
         case _ =>
-          // fallback: the original dynamic staging (agg job + one-row write)
           val events = s.read.parquet(t(sfDir, "events"))
-          val sentinel = events.agg(max(col("ts")).as("ts")).select(lit(-1L).as("event_id"),
+          val sentDir = Scratch.dir("q33sentinel")
+          events.agg(max(col("ts")).as("ts")).select(lit(-1L).as("event_id"),
             (col("ts") + expr("INTERVAL 365 DAYS")).as("ts"), lit(-1L).as("user_id"))
-          val sentDir = scratchDir("q33sentinel")
-          sentinel.coalesce(1).write.mode("overwrite").parquet(sentDir)
-          java.nio.file.Files.list(java.nio.file.Paths.get(sentDir))
+            .coalesce(1).write.mode("overwrite").parquet(sentDir)
+          Files.list(Paths.get(sentDir))
             .filter(p => p.getFileName.toString.endsWith(".parquet"))
             .findFirst().orElseThrow(() =>
               new IllegalStateException(s"no parquet part written under $sentDir"))
       }
-      java.nio.file.Files.createSymbolicLink(
-        java.nio.file.Paths.get(dir, "events.parquet"),
-        java.nio.file.Paths.get(t(sfDir, "events")).toAbsolutePath)
-      java.nio.file.Files.createSymbolicLink(
-        java.nio.file.Paths.get(dir, "sentinel.parquet"), sentinelPart)
-      dir
+      stageWithSentinel(sfDir, "events", sentinel)
     })
 
   /** max(ts) in micros from a SINGLE parquet file's footer column
@@ -135,7 +127,7 @@ object SparkEntry {
     * fixture matches; any other layout must keep the dynamic staging so
     * the directory's two files agree on the ts type. */
   private def footerMaxTsMicros(s: SparkSession, path: String): Option[Long] = try {
-    if (!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path))) return None
+    if (!Files.isRegularFile(Paths.get(path))) return None
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), s.sparkContext.hadoopConfiguration)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -165,42 +157,10 @@ object SparkEntry {
     } finally r.close()
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The file stream source needs a directory; the testdata tables are
-    * single parquet files. Stage the corpus AND the constant sentinel in
-    * ONE directory via memoized symlinks — zero copy, no staging rewrite,
-    * and a single file source (the corpus and sentinel share the
-    * (doc_id, text) schema, so the old second source + streaming union
-    * bought nothing: the ingest stamp derives from doc_id, a column). */
-  private val q31StageDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def q31StageDir(s: SparkSession, sfDir: String): String =
-    q31StageDirs.computeIfAbsent(sfDir, { _ =>
-      // absolute target: a relative sfDir would store a relative link that
-      // the OS resolves against the TEMP dir — a dangling symlink only q31
-      // would trip over
-      val target = java.nio.file.Paths.get(t(sfDir, "documents")).toAbsolutePath
-      val dir = scratchDir("q31stage")
-      if (java.nio.file.Files.isDirectory(target)) {
-        // multi-file corpus: link each part file into the stage dir
-        val ls = java.nio.file.Files.list(target)
-        try ls.forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p) &&
-              p.getFileName.toString.endsWith(".parquet"))
-            java.nio.file.Files.createSymbolicLink(
-              java.nio.file.Paths.get(dir, p.getFileName.toString), p)
-        } finally ls.close()
-      } else
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(dir, "documents.parquet"), target)
-      java.nio.file.Files.createSymbolicLink(
-        java.nio.file.Paths.get(dir, "sentinel.parquet"),
-        java.nio.file.Paths.get(q31SentinelDir(s), "sentinel.parquet"))
-      dir
-    })
-
   /** Flagship: the end-to-end extract→link→insert KG pipeline over the
     * synthetic webtext corpus at tiny scale; returns the triples table. */
   def entry(spark: SparkSession): DataFrame = {
-    val ckpt = scratchDir("kgentry")
+    val ckpt = Scratch.dir("kgentry")
     val corpus = WebtextGen.generate(spark, 400, 8).select(col("url"), col("html"))
     val result = KgPipeline.run(spark, corpus, "html", KgPipeline.domainModels(),
       KgPipeline.PipelineConfig(rounds = 1, maxCandidatesPerRound = 64, minMentionFreq = 2),
@@ -370,7 +330,7 @@ object SparkEntry {
     }),
     // --- KG pipeline (not SQL-expressible: rows-only checks) -------------
     "q24_kg_triples" -> ((s, d) => {
-      val ckpt = scratchDir("kgq")
+      val ckpt = Scratch.dir("kgq")
       val corpus = s.read.parquet(t(d, "documents"))
       KgPipeline.run(s, corpus, "text", KgPipeline.domainModels(),
         KgPipeline.PipelineConfig(rounds = 2, maxCandidatesPerRound = 200, minMentionFreq = 3),
@@ -410,9 +370,9 @@ object SparkEntry {
       // source/offset log, no streaming union); append mode + watermark —
       // the bounded-state production shape
       val sink = s"q31_mentions_${System.nanoTime()}"
-      val stageDir = q31StageDir(s, d)
-      val q = graft.streaming.StreamingOps.streamingMentionsAppendOneDir(
-        s, stageDir, s.read.parquet(t(d, "documents")).schema, sink)
+      val stageDir = q31StageDir(d)
+      val q = graft.streaming.StreamingOps.streamingMentions(s, Seq(stageDir),
+        s.read.parquet(t(d, "documents")).schema, graft.streaming.StreamingOps.Sink.Memory(sink))
       // awaitTermination returns FALSE on timeout (it does not throw):
       // falling through would read a partially-drained sink — a silently
       // wrong result in Verify and a leaked still-running query in Bench
@@ -428,7 +388,7 @@ object SparkEntry {
       val sink = s"q33_sessions_${System.nanoTime()}"
       val dir = q33EventsDir(s, d)
       val q = graft.streaming.StreamingOps.streamingSessions(
-        s, dir, s.read.parquet(dir).schema, sink)
+        s, dir, s.read.parquet(dir).schema, graft.streaming.StreamingOps.Sink.Memory(sink))
       require(q.awaitTermination(300000), "q33 stream did not drain in 300 s")
       s.table(sink)
         .filter(col("user_id") >= 0)

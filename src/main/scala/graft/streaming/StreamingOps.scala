@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.pipeline.KgPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured-streaming twins of the batch operators: a continuously
   * arriving webtext/event feed drives the same aggregation logic through
@@ -17,141 +18,65 @@ object StreamingOps {
     * one constant shared by every signature that defaults it. */
   val DefaultTombstoneTtlMicros: Long = 30L * 24 * 3600 * 1000000L
 
-  /** Parent dir for the MEMORY-sink twins' checkpoints, removed on JVM
-    * exit. The memory sink is itself non-durable (these twins are the test
-    * harness; the production `*ToParquet` variants take a caller-owned
-    * checkpointLocation), so its state-store/WAL traffic — the per-batch
-    * per-partition delta files and offset commits that dominate small-batch
-    * latency — belongs on the fastest EPHEMERAL storage available: tmpfs
-    * when present, the JVM temp dir otherwise (guide §6: I/O layout; no
-    * durability contract changes because none existed). */
-  private lazy val ephemeralCkptBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base =
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base, "graft-stream-ck")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.list(p).forEach(rm(_))
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      try rm(dir) catch { case _: Throwable => () }
-    }))
-    dir
+  /** Where a streaming twin writes. Every twin runs in append mode under
+    * an AvailableNow trigger: each start drains the files that have
+    * arrived so far and terminates. */
+  sealed trait Sink
+  object Sink {
+    /** In-memory table `queryName` (the test and bench harness). The sink
+      * itself is non-durable, so its checkpoint goes to ephemeral scratch. */
+    final case class Memory(queryName: String) extends Sink
+    /** Parquet FILE sink with a caller-owned checkpoint — the shape an
+      * actually unbounded ingest runs with. Re-starting with the same
+      * checkpoint resumes exactly-once: file-source offsets, the watermark
+      * and all aggregation/GroupState live in the checkpoint, so
+      * incremental batches and mid-stream restarts are the normal mode of
+      * operation, not a special case. */
+    final case class Parquet(outDir: String, checkpointDir: String) extends Sink
   }
 
-  private def ephemeralCheckpoint(): String =
-    java.nio.file.Files.createTempDirectory(ephemeralCkptBase, "q").toString
-
-  /** Streaming mention counts over an arriving webtext directory: same
-    * bigram extraction as KgPipeline.extractMentions, windowed by ingest
-    * time with a watermark. Complete-output top mentions land in an
-    * in-memory table for the smoke test. */
-  def streamingMentions(spark: SparkSession, inputDir: String, schema: org.apache.spark.sql.types.StructType,
-                        queryName: String = "mentions"): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    stream.select(explode(KgPipeline.mentionBigrams(col("text"))).as("mention"))
-      .groupBy("mention").count()
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ephemeralCheckpoint())
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** The one writeStream call site of the streaming twins. */
+  private def start(df: Dataset[_], sink: Sink): StreamingQuery = {
+    val w = df.writeStream.outputMode("append").trigger(Trigger.AvailableNow())
+    (sink match {
+      case Sink.Memory(queryName) =>
+        w.format("memory").queryName(queryName)
+          .option("checkpointLocation", graft.Scratch.dir("stream-ck"))
+      case Sink.Parquet(outDir, checkpointDir) =>
+        w.format("parquet").option("path", outDir)
+          .option("checkpointLocation", checkpointDir)
+    }).start()
   }
 
-  /** Append-mode, watermarked streaming mention counts — the production
-    * shape (bounded state: windows are evicted once the watermark passes,
-    * unlike the complete-mode smoke above). Corpus rows are stamped into an
-    * ingest-hour window; a sentinel row (doc_id < 0, empty text — yields no
-    * mentions) arrives 3 hours later and advances the watermark past the
-    * corpus window so AvailableNow's final no-data micro-batch flushes the
-    * closed window's counts to the sink. The watermark is attached BEFORE
-    * the mention explode so the mention-less sentinel still advances it. */
-  def streamingMentionsAppend(spark: SparkSession, docsDir: String,
-                              docsSchema: org.apache.spark.sql.types.StructType,
-                              sentinelDir: String,
-                              sentinelSchema: org.apache.spark.sql.types.StructType,
-                              queryName: String = "mentions_append"): StreamingQuery =
-    mentionsAppendPlan(spark, docsDir, docsSchema, sentinelDir, sentinelSchema)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ephemeralCheckpoint())
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Production-sink variant of [[streamingMentionsAppend]]: the same
-    * watermarked append-mode plan, written to a parquet FILE sink with a
-    * checkpointLocation — the shape an actually unbounded ingest runs
-    * with (the memory-sink twin is a test harness). Each call drains the
-    * files that have arrived so far (AvailableNow) and terminates;
-    * re-calling with the same checkpoint resumes exactly-once — file-source
-    * offsets, watermark, and aggregation state all live in the checkpoint —
-    * so incremental batches and mid-stream restarts are the normal mode of
-    * operation, not a special case. */
-  def streamingMentionsToParquet(spark: SparkSession, docsDir: String,
-                                 docsSchema: org.apache.spark.sql.types.StructType,
-                                 sentinelDir: String,
-                                 sentinelSchema: org.apache.spark.sql.types.StructType,
-                                 outDir: String, checkpointDir: String): StreamingQuery =
-    mentionsAppendPlan(spark, docsDir, docsSchema, sentinelDir, sentinelSchema)
-      .writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** One-directory variant of [[streamingMentionsAppend]]: the corpus and
-    * the sentinel file are staged in the SAME directory (they share the
-    * (doc_id, text) schema) and read through a single file source — one
-    * file-listing/offset log instead of two and no streaming union node.
-    * The per-row semantics are identical to the two-source plan: the
-    * ingest timestamp is derived from doc_id (a column, not the source),
-    * and AvailableNow snapshots both files into the same data batch either
-    * way, so watermark progression and the flush batch are unchanged. */
-  def streamingMentionsAppendOneDir(spark: SparkSession, stagedDir: String,
-                                    schema: org.apache.spark.sql.types.StructType,
-                                    queryName: String = "mentions_append"): StreamingQuery =
-    mentionsStamped(spark.readStream.schema(schema).parquet(stagedDir)
-        .select(col("doc_id"), col("text")))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ephemeralCheckpoint())
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Shared watermarked mention-count plan for the append-mode twins.
-    * Corpus rows are stamped into an ingest-hour window; a sentinel row
-    * (doc_id < 0, empty text — yields no mentions) arrives 3 hours later
-    * and advances the watermark past the corpus window so the final
-    * no-data micro-batch flushes the closed window's counts to the sink.
-    * The watermark is attached BEFORE the mention explode so the
-    * mention-less sentinel still advances it. */
-  private def mentionsAppendPlan(spark: SparkSession, docsDir: String,
-                                 docsSchema: org.apache.spark.sql.types.StructType,
-                                 sentinelDir: String,
-                                 sentinelSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val docs = spark.readStream.schema(docsSchema).parquet(docsDir)
-      .select(col("doc_id"), col("text"))
-    val sentinel = spark.readStream.schema(sentinelSchema).parquet(sentinelDir)
-      .select(col("doc_id"), col("text"))
-    mentionsStamped(docs.union(sentinel))
-  }
-
-  /** Watermark-stamp + bigram-count tail shared by the one- and two-source
-    * append plans (rows: (doc_id, text); doc_id < 0 = the flush sentinel). */
-  private def mentionsStamped(rows: DataFrame): DataFrame = {
+  /** Append-mode, watermarked streaming mention counts: the same bigram
+    * extraction as KgPipeline.extractMentions over (doc_id, text) rows
+    * arriving in `dirs`. Bounded state: windows are evicted once the
+    * watermark passes them. Corpus rows are stamped into an ingest-hour
+    * window; a sentinel row (doc_id < 0, empty text — yields no mentions)
+    * arrives 3 hours later and advances the watermark past the corpus
+    * window, so the final no-data micro-batch flushes the closed window's
+    * counts to the sink. The watermark is attached BEFORE the mention
+    * explode so the mention-less sentinel still advances it.
+    *
+    * The sentinel may sit in the corpus directory or in a directory of its
+    * own: the ingest stamp derives from doc_id (a column, not the source),
+    * and AvailableNow snapshots every file into the same data batch either
+    * way. One directory builds one file source with no union node — one
+    * file listing and offset log, the q31 staging shape. */
+  def streamingMentions(spark: SparkSession, dirs: Seq[String], schema: StructType,
+                        sink: Sink): StreamingQuery = {
+    require(dirs.nonEmpty, "streamingMentions needs at least one input directory")
+    val rows = dirs.map(d => spark.readStream.schema(schema).parquet(d)
+      .select(col("doc_id"), col("text"))).reduce(_ union _)
     val base = lit("2026-01-01 00:30:00").cast("timestamp")
     val flush = lit("2026-01-01 03:00:00").cast("timestamp")
-    rows
+    start(rows
       .withColumn("ts", when(col("doc_id") >= 0, base).otherwise(flush))
       .withWatermark("ts", "1 hour")
       .select(col("ts"), explode(KgPipeline.mentionBigrams(col("text"))).as("mention"))
       .groupBy(window(col("ts"), "1 hour"), col("mention"))
       .agg(count(lit(1)).as("freq"))
-      .select(col("mention"), col("freq"))
+      .select(col("mention"), col("freq")), sink)
   }
 
   /** Event for the stateful sessionizer. */
@@ -252,14 +177,18 @@ object StreamingOps {
     }
   }
 
-  /** Shared watermarked sessionization plan for the streaming twins. */
-  private def sessionsPlan(spark: SparkSession, inputDir: String,
-                           schema: org.apache.spark.sql.types.StructType,
-                           gapMinutes: Int,
-                           tombstoneTtlMicros: Long = DefaultTombstoneTtlMicros): org.apache.spark.sql.Dataset[SessOut] = {
+  /** Streaming gap-sessionization: watermarked event stream →
+    * groupByKey(user) → flatMapGroupsWithState(EventTimeTimeout). A
+    * sentinel user (user_id < 0) with a far-future timestamp flushes the
+    * watermark on finite inputs; its own session is filtered by readers.
+    * With a [[Sink.Parquet]] checkpoint, sessions left open by one drain
+    * are continued or closed correctly by the next. */
+  def streamingSessions(spark: SparkSession, inputDir: String, schema: StructType,
+                        sink: Sink, gapMinutes: Int = 30,
+                        tombstoneTtlMicros: Long = DefaultTombstoneTtlMicros): StreamingQuery = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.readStream.schema(schema).parquet(inputDir)
+    start(spark.readStream.schema(schema).parquet(inputDir)
       .select(col("user_id").cast("long").as("user_id"),
         col("ts").cast("timestamp").as("ts"),
         col("event_id").cast("long").as("event_id"))
@@ -267,60 +196,15 @@ object StreamingOps {
       .as[SessEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        sessionFn(gapMinutes * 60000000L, tombstoneTtlMicros))
+        sessionFn(gapMinutes * 60000000L, tombstoneTtlMicros)), sink)
   }
 
-  /** Streaming gap-sessionization: watermarked event stream →
-    * groupByKey(user) → flatMapGroupsWithState(EventTimeTimeout). A
-    * sentinel user (user_id < 0) with a far-future timestamp flushes the
-    * watermark on finite inputs; its own session is filtered by readers. */
-  def streamingSessions(spark: SparkSession, inputDir: String,
-                        schema: org.apache.spark.sql.types.StructType,
-                        queryName: String = "sessions_stream",
-                        gapMinutes: Int = 30): StreamingQuery =
-    sessionsPlan(spark, inputDir, schema, gapMinutes)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ephemeralCheckpoint())
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Production-sink variant of [[streamingSessions]]: the same stateful
-    * plan written to a parquet FILE sink with a checkpointLocation. Each
-    * call drains the event files that have arrived so far (AvailableNow)
-    * and terminates; re-calling with the same checkpoint resumes
-    * exactly-once — file-source offsets, the watermark, AND the open-
-    * session `GroupState` all live in the checkpoint, so sessions left
-    * open by one drain are closed correctly by the next (or by its
-    * watermark timeout). Mid-stream restart is the normal operating mode
-    * of an unbounded event feed, not a recovery special case. */
-  def streamingSessionsToParquet(spark: SparkSession, inputDir: String,
-                                 schema: org.apache.spark.sql.types.StructType,
-                                 outDir: String, checkpointDir: String,
-                                 gapMinutes: Int = 30,
-                                 tombstoneTtlMicros: Long = DefaultTombstoneTtlMicros): StreamingQuery =
-    sessionsPlan(spark, inputDir, schema, gapMinutes, tombstoneTtlMicros)
-      .writeStream.outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** Streaming hourly event aggregation with a watermark (append mode). */
-  def streamingEventAgg(spark: SparkSession, inputDir: String,
-                        schema: org.apache.spark.sql.types.StructType,
-                        queryName: String = "event_agg"): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    stream
+  def streamingEventAgg(spark: SparkSession, inputDir: String, schema: StructType,
+                        sink: Sink): StreamingQuery =
+    start(spark.readStream.schema(schema).parquet(inputDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(queryName)
-      .option("checkpointLocation", ephemeralCheckpoint())
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      .agg(count(lit(1)).as("n_events"), sum("value").as("sum_value")), sink)
 }

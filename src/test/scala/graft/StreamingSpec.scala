@@ -2,29 +2,17 @@ package graft
 
 import graft.pipeline.KgPipeline
 import graft.streaming.StreamingOps
+import graft.streaming.StreamingOps.Sink
 import graft.webtext.WebtextGen
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Structured-streaming twins driven synchronously by parquet batches. */
 class StreamingSpec extends SparkSpecBase {
 
-  test("streaming mention counts equal the batch extraction") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("stream_in").toString
-    val web = WebtextGen.generate(spark, 300, 4)
-      .select(col("url"), graft.extract.HtmlExtract.extractBinary(col("html")).as("text"))
-    web.write.mode("overwrite").parquet(dir)
-    val schema = spark.read.parquet(dir).schema
-    val q = StreamingOps.streamingMentions(spark, dir, schema, "mentions_test")
-    q.awaitTermination(120000)
-    val streamed = spark.sql("SELECT mention, count FROM mentions_test")
-      .as[(String, Long)].collect().toMap
-    val batch = KgPipeline.extractMentions(web, "text", 1L)
-      .as[(String, Long)].collect().toMap
-    assert(streamed == batch)
-  }
+  private val sf = "/root/testdata/sf0.001"
 
   test("append-mode watermarked mention counts equal the batch extraction") {
     import spark.implicits._
@@ -37,9 +25,9 @@ class StreamingSpec extends SparkSpecBase {
     Seq((-1L, "")).toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(sentinelDir)
     val schema = spark.read.parquet(dir).schema
-    val q = StreamingOps.streamingMentionsAppend(spark, dir, schema,
-      sentinelDir, spark.read.parquet(sentinelDir).schema, "mentions_append_test")
-    q.awaitTermination(120000)
+    val q = StreamingOps.streamingMentions(spark, Seq(dir, sentinelDir), schema,
+      Sink.Memory("mentions_append_test"))
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.sql("SELECT mention, freq FROM mentions_append_test")
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(web, "text", 1L)
@@ -61,9 +49,9 @@ class StreamingSpec extends SparkSpecBase {
     Seq((-1L, "")).toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
-    val q = StreamingOps.streamingMentionsAppendOneDir(spark, dir, schema,
-      "mentions_onedir_test")
-    q.awaitTermination(120000)
+    val q = StreamingOps.streamingMentions(spark, Seq(dir), schema,
+      Sink.Memory("mentions_onedir_test"))
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.sql("SELECT mention, freq FROM mentions_onedir_test")
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(web, "text", 1L)
@@ -81,12 +69,10 @@ class StreamingSpec extends SparkSpecBase {
       .select(monotonically_increasing_id().as("doc_id"),
         graft.extract.HtmlExtract.extractBinary(col("html")).as("text"))
       .persist()
-    val docsSchema = web.schema
-    val sentinelSchema = web.schema
     def drain(): Unit = {
-      val q = StreamingOps.streamingMentionsToParquet(spark, docsDir, docsSchema,
-        sentinelDir, sentinelSchema, outDir, ckptDir)
-      q.awaitTermination(120000)
+      val q = StreamingOps.streamingMentions(spark, Seq(docsDir, sentinelDir), web.schema,
+        Sink.Parquet(outDir, ckptDir))
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     // three incremental arrival batches, the query RESTARTED (same
     // checkpoint) between each — file-source offsets, watermark, and agg
@@ -113,20 +99,83 @@ class StreamingSpec extends SparkSpecBase {
 
   test("q31 streams a single-file parquet table via symlink dir (driver shape)") {
     import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val streamed = SparkEntry.queries("q31_streaming_mentions")(spark, d)
+    val streamed = SparkEntry.queries("q31_streaming_mentions")(spark, sf)
       .as[(String, Long)].collect().toMap
     val batch = KgPipeline.extractMentions(
-        spark.read.parquet(s"$d/documents.parquet"), "text", 3L)
+        spark.read.parquet(s"$sf/documents.parquet"), "text", 3L)
       .as[(String, Long)].collect().toMap
     assert(streamed == batch)
     assert(streamed.nonEmpty)
   }
 
+  /** A parquet part file of a Spark write under `dir`. */
+  private def somePart(dir: String): Path =
+    Files.list(Paths.get(dir)).iterator.asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+
+  test("q31 staging: a corpus part named sentinel.parquet streams with the corpus") {
+    import spark.implicits._
+    val sfDir = Files.createTempDirectory("q31_collide").toString
+    val docsDir = s"$sfDir/documents.parquet"
+    spark.read.parquet(s"$sf/documents.parquet").repartition(3)
+      .write.parquet(docsDir)
+    val part = somePart(docsDir)
+    Files.move(part, part.resolveSibling("sentinel.parquet"))
+    val streamed = SparkEntry.queries("q31_streaming_mentions")(spark, sfDir)
+      .as[(String, Long)].collect().toMap
+    val batch = KgPipeline.extractMentions(spark.read.parquet(docsDir), "text", 3L)
+      .as[(String, Long)].collect().toMap
+    assert(streamed == batch)
+    assert(streamed.nonEmpty)
+  }
+
+  test("q31 staging fails loudly on an empty or nested documents directory") {
+    val empty = Files.createTempDirectory("q31_empty").toString
+    Files.createDirectory(Paths.get(empty, "documents.parquet"))
+    val nested = Files.createTempDirectory("q31_nested").toString
+    spark.read.parquet(s"$sf/documents.parquet")
+      .write.parquet(s"$nested/documents.parquet/lang=en")
+    for (d <- Seq(nested, empty)) {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries("q31_streaming_mentions")(spark, d))
+      assert(e.getMessage.contains(s"$d/documents.parquet"), e.getMessage)
+    }
+  }
+
+  test("q33 sentinel gate: an events max ts near Long.MaxValue takes the dynamic sentinel") {
+    import spark.implicits._
+    // max ts half a day inside the 366-day margin below Long.MaxValue
+    // micros: maxTs + margin overflows Long, while the dynamic sentinel
+    // (maxTs + 365 days) still fits
+    val day = 24L * 3600 * 1000000L
+    val minute = 60000000L
+    val top = Long.MaxValue - 365 * day - day / 2
+    val sfDir = Files.createTempDirectory("q33_gate").toString
+    // user 1: two sessions (a 140-minute gap); user 2: one session ending at the max
+    Seq((1L, top - 180 * minute, 1L), (2L, top - 170 * minute, 1L),
+      (3L, top - 30 * minute, 1L), (4L, top - 10 * minute, 2L), (5L, top, 2L))
+      .toDF("event_id", "ts_us", "user_id")
+      .select(col("event_id"),
+        timestamp_micros(col("ts_us")).cast("timestamp_ntz").as("ts"), col("user_id"))
+      .coalesce(1).write.parquet(s"$sfDir/tmp")
+    Files.move(somePart(s"$sfDir/tmp"), Paths.get(sfDir, "events.parquet"))
+    val streamed = SparkEntry.queries("q33_streaming_sessions")(spark, sfDir)
+      .select(col("user_id").cast("long"), col("session_seq"), col("n_events"),
+        unix_micros(col("session_start")), unix_micros(col("session_end")))
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    val batch = graft.ops.EventOps.sessionize(spark.read.parquet(s"$sfDir/events.parquet"))
+      .select(col("user_id").cast("long"), col("session_seq").cast("long"),
+        col("n_events").cast("long"), unix_micros(col("session_start").cast("timestamp")),
+        unix_micros(col("session_end").cast("timestamp")))
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
+    assert(batch.size == 3)
+    assert(streamed == batch)
+  }
+
   test("stateful flatMapGroupsWithState sessionization equals the batch twin") {
     import spark.implicits._
     val dir = Files.createTempDirectory("stream_sess").toString
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val events = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("ts"), col("user_id"))
     // sentinel: far-future event advances the watermark so every open
     // session times out and flushes in the final no-data batch
@@ -136,8 +185,8 @@ class StreamingSpec extends SparkSpecBase {
       lit(-1L).as("user_id"))
     events.union(sentinel).coalesce(1).write.mode("overwrite").parquet(dir)
     val q = StreamingOps.streamingSessions(spark, dir,
-      spark.read.parquet(dir).schema, "sess_stream_test")
-    q.awaitTermination(120000)
+      spark.read.parquet(dir).schema, Sink.Memory("sess_stream_test"))
+    assert(q.awaitTermination(120000), "stream did not drain")
     val streamed = spark.table("sess_stream_test")
       .filter(col("user_id") >= 0)
       .select("user_id", "session_seq", "n_events", "session_start", "session_end")
@@ -155,7 +204,7 @@ class StreamingSpec extends SparkSpecBase {
     val inDir = Files.createTempDirectory("sess_sink_in").toString
     val outDir = Files.createTempDirectory("sess_sink_out").toString + "/out"
     val ckpt = Files.createTempDirectory("sess_sink_ck").toString
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val events = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("ts"), col("user_id")).persist()
     // split the feed at its temporal midpoint: sessions spanning the cut
     // are left OPEN in the checkpointed GroupState by drain 1 and must be
@@ -164,9 +213,9 @@ class StreamingSpec extends SparkSpecBase {
       .as[(java.sql.Timestamp, java.sql.Timestamp)].head()
     val cut = new java.sql.Timestamp((tMin.getTime + tMax.getTime) / 2)
     def drain(): Unit = {
-      val q = StreamingOps.streamingSessionsToParquet(spark, inDir,
-        events.schema, outDir, ckpt)
-      q.awaitTermination(120000)
+      val q = StreamingOps.streamingSessions(spark, inDir,
+        events.schema, Sink.Parquet(outDir, ckpt))
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     events.filter(col("ts") < lit(cut)).coalesce(1).write.mode("append").parquet(inDir)
     drain()
@@ -193,7 +242,6 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("session tombstones are reclaimed after the TTL (bounded state store)") {
-    import graft.streaming.StreamingOps
     import spark.implicits._
     val inDir = Files.createTempDirectory("sess_ttl_in").toString
     val outDir = Files.createTempDirectory("sess_ttl_out").toString + "/out"
@@ -206,9 +254,9 @@ class StreamingSpec extends SparkSpecBase {
     val schema = spark.read.parquet(inDir).schema
     val dayMicros = 24L * 3600 * 1000000L
     def drain(): Unit = {
-      val q = StreamingOps.streamingSessionsToParquet(spark, inDir, schema, outDir, ckpt,
+      val q = StreamingOps.streamingSessions(spark, inDir, schema, Sink.Parquet(outDir, ckpt),
         gapMinutes = 30, tombstoneTtlMicros = dayMicros)
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "stream did not drain")
     }
     drain()
     write(Seq((-1L, at(2), -1L))) // watermark past gap: session 1 closes, tombstone set
@@ -227,16 +275,24 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming hourly event agg produces windows under watermark") {
+    import spark.implicits._
     // readStream needs a directory, not a single parquet file
     val dir = Files.createTempDirectory("stream_ev").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .write.mode("overwrite").parquet(dir)
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    events.write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
-    val q = StreamingOps.streamingEventAgg(spark, dir, schema, "eventagg_test")
-    q.awaitTermination(120000)
-    // append-mode with watermark emits only closed windows; on a finite
-    // batch the final window stays open — check the intermediate state too
-    val n = spark.sql("SELECT count(*) FROM eventagg_test").head.getLong(0)
-    assert(n >= 0) // query ran to completion without error
+    val q = StreamingOps.streamingEventAgg(spark, dir, schema, Sink.Memory("eventagg_test"))
+    assert(q.awaitTermination(120000), "stream did not drain")
+    // append mode with a watermark emits only windows the watermark has
+    // closed; each must carry the batch count for its (window, type) key
+    val streamed = spark.table("eventagg_test")
+      .select(unix_micros(col("window.start")), col("event_type"), col("n_events"))
+      .as[(Long, String, Long)].collect()
+    val batch = graft.ops.EventOps.windowedAgg(events.withColumn("ts", col("ts").cast("timestamp")))
+      .select(unix_micros(col("win_start")), col("event_type"), col("n_events"))
+      .as[(Long, String, Long)].collect().map { case (w, e, n) => (w, e) -> n }.toMap
+    assert(streamed.length > 0)
+    for ((w, e, n) <- streamed)
+      assert(batch.get((w, e)).contains(n), s"window $w type $e: streamed $n, batch ${batch.get((w, e))}")
   }
 }

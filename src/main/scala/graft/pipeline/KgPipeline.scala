@@ -557,26 +557,35 @@ object KgPipeline {
     * delta needs them), and per-sub-phase lineage rows (the §9g drive
     * showed canonicalize as 47% of the 2-round wall with no breakdown —
     * stages: canon_embed / canon_pairs / canon_cc / canon_preload /
-    * canon_apply; the driver path fuses pairs+cc into canon_cc). */
-  /** `survivorVecs` is the round's (vec_id, embedding) table of mints that
-    * SURVIVED the merge — the per-round delta of the distributed embedding
-    * store (the at-scale decide path retrieves seeds from that store, so
-    * the checkpoint persists it like nodes/edges; rounds are purely
-    * additive, merges only ever remove same-round mints). Call `release`
-    * after the checkpoint has written it. */
+    * canon_apply; the driver paths fuse pairs+cc into canon_cc).
+    *
+    * `survivorVecs` builds the round's (vec_id, embedding) table of mints
+    * that SURVIVED the merge — the per-round delta of the distributed
+    * embedding store (the at-scale decide path retrieves seeds from that
+    * store, so the checkpoint persists it like nodes/edges; rounds are
+    * purely additive, merges only ever remove same-round mints). It is a
+    * thunk so the driver paths build no second copy of the vectors unless
+    * the store wants it. Call `release` after the checkpoint has written
+    * it. */
   case class CanonResult(merge: Map[Long, Long],
                          addedEdges: Seq[(Long, Long, String)],
                          lineage: Seq[LineageRow],
-                         survivorVecs: DataFrame,
+                         survivorVecs: () => DataFrame,
                          release: () => Unit)
 
   /** Stage 5: canonicalization — embedding near-dup pairs among this
     * round's new concepts + CC merge (min-id canonical). Applies the merge
-    * to the taxonomy. Surviving (non-merged) mint embeddings are preloaded
-    * into `embCache` AFTER the merge map is known, in bounded chunks
-    * (toLocalIterator — one partition of driver memory at a time): the r4
-    * form collected the FULL mint vector set to the driver before the
-    * merge, including vectors of dups the merge immediately discards. */
+    * to the taxonomy and preloads the surviving mint embeddings into
+    * `embCache`. Three regimes, by mint count `n` and where the vectors
+    * end up (the `canon_*` lineage rows show which one ran):
+    *   - n ≤ 10⁴: exact all-pairs cosine on the driver.
+    *   - n > 10⁴ with a cache the next round will read
+    *     (`embCache != null` and the snapshot ≤ `preloadMaxNodes`): every
+    *     mint vector lands in the driver cache anyway, so they are fetched
+    *     once and banded on the driver — the Spark branch's 256-bit/8-band
+    *     LSH and min-id union-find, without its Spark jobs.
+    *   - otherwise: Spark LSH-blocked pairs + connected components; the
+    *     only regime that keeps the vectors off the driver. */
   def canonicalize(spark: SparkSession, taxo: MutableTaxo,
                    newConcepts: Seq[(String, Long)], models: IconModels,
                    threshold: Double,
@@ -603,6 +612,21 @@ object KgPipeline {
     }
     import spark.implicits._
     val n = newConcepts.size
+    // survivors only — a merged dup's vector would be dropped by the next
+    // sync anyway (and must not enter the embedding store)
+    def finishLocal(ids: Array[Long], emb: Array[Array[Float]],
+                    m: Map[Long, Long]): CanonResult = {
+      val keep = ids.indices.filterNot(i => m.contains(ids(i)))
+      if (preloadWanted(m.size)) sub("canon_preload", n) {
+        embCache.preload(keep.map(ids).toArray, keep.map(emb).toArray)
+        ((), keep.size.toLong)
+      }
+      val added = sub("canon_apply", m.size.toLong) {
+        val a = applyMerge(taxo, m); (a, a.size.toLong)
+      }
+      CanonResult(m, added, lin.toSeq,
+        () => keep.map(i => (ids(i), emb(i))).toDF("vec_id", "embedding"), () => ())
+    }
     if (n < 2) {
       // nothing to merge, but a 1-concept mint still seeds the decide
       // cache and the embedding store — the zero-repeat-embedding
@@ -611,158 +635,216 @@ object KgPipeline {
         else models.emb.embedBatched(newConcepts.map(_._1))
       if (preloadWanted(0) && newConcepts.nonEmpty)
         embCache.preload(newConcepts.map(_._2).toArray, emb1)
-      val sv1 = newConcepts.map(_._2).zip(emb1).toDF("vec_id", "embedding")
-      return CanonResult(Map.empty, Nil, Nil, sv1, () => ())
+      val sv1 = newConcepts.map(_._2).zip(emb1)
+      return CanonResult(Map.empty, Nil, Nil, () => sv1.toDF("vec_id", "embedding"), () => ())
+    }
+    // executor-side embedding for mints beyond driver scale (embedding a
+    // 10⁶-concept mint on the driver was a single-threaded stall)
+    def embedDistributed(): DataFrame = {
+      val bm = spark.sparkContext.broadcast(models)
+      newConcepts.toDF("label", "vec_id")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .as[(String, Long)]
+        .mapPartitions { it =>
+          // batch-64 model contract (M1): one encoder invocation per
+          // ≤64-label chunk, never one per row
+          val emb = bm.value.emb
+          it.grouped(64).flatMap { chunk =>
+            chunk.iterator.zip(emb.embed(chunk.map(_._1)).iterator)
+              .map { case ((_, id), v) => (id, v) }
+          }
+        }
+        .toDF("vec_id", "embedding")
     }
     if (n <= 10000) {
-        val ids = newConcepts.map(_._2).toArray
-        val emb = sub("canon_embed", n)((models.emb.embedBatched(newConcepts.map(_._1)), n))
-        val m = sub("canon_cc", n) {
-          val mm = canonicalizeLocal(ids, emb, threshold); (mm, mm.size.toLong)
-        }
-        // survivors only — a merged dup's vector would be dropped by the
-        // next sync anyway (and must not enter the embedding store)
-        val keep = ids.indices.filterNot(i => m.contains(ids(i)))
-        if (preloadWanted(m.size)) sub("canon_preload", n) {
-          embCache.preload(keep.map(ids).toArray, keep.map(emb).toArray)
-          ((), keep.size.toLong)
-        }
-        val sv = keep.map(i => (ids(i), emb(i))).toDF("vec_id", "embedding")
-        val added = sub("canon_apply", m.size.toLong) {
-          val a = applyMerge(taxo, m); (a, a.size.toLong)
-        }
-        CanonResult(m, added, lin.toSeq, sv, () => ())
-      } else {
-        // Spark path for rounds that mint concept sets beyond driver scale:
-        // distributed embedding, LSH-blocked near-dup pairs + distributed
-        // connected components (embedding a 10⁶-concept mint on the driver
-        // was a single-threaded stall)
-        import spark.implicits._
-        val bm = spark.sparkContext.broadcast(models)
-        val vecs = sub("canon_embed", n) {
-          val v = newConcepts.toDF("label", "vec_id")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .as[(String, Long)]
-            .mapPartitions { it =>
-              // batch-64 model contract (M1): one encoder invocation per
-              // ≤64-label chunk, never one per row
-              val emb = bm.value.emb
-              it.grouped(64).flatMap { chunk =>
-                chunk.iterator.zip(emb.embed(chunk.map(_._1)).iterator)
-                  .map { case ((_, id), v) => (id, v) }
-              }
-            }
-            .toDF("vec_id", "embedding")
-            .persist()
-          (v, v.count())
-        }
-        // 256-bit/8-band signatures (32 sign bits per bucket key), NOT the
-        // q17 default (16/4): 4-bit buckets have only 16 distinct values
-        // per band, so a 10⁶-concept mint collapses into ~60k-member
-        // buckets → ~10¹¹ candidate pairs (measured: the 1M-candidate
-        // drive sat in this join indefinitely); 16-bit rows still admitted
-        // ~6×10⁷ random pairs at 10⁶ near-uniform vectors and OOM'd the
-        // verification join (embeddings are re-joined per candidate pair).
-        // 32-bit rows put random collisions at 2⁻³² per band (~10³ pairs
-        // at 10⁶ vectors); band recall stays ≥ 0.99 for the true-duplicate
-        // mints this merge targets (cos ≈ 1) — borderline-threshold pairs
-        // are sampled, the documented approximation vs the exact ≤10⁴
-        // driver path.
-        var nPairs = 0L
-        val pairs = sub("canon_pairs", n) {
-          val p = graft.ops.SimOps.cosineNearDupPairs(vecs, threshold,
-              bits = 256, bands = 8, dim = models.emb.dim)
-            .select(col("a"), col("b")).persist()
-          nPairs = p.count()
-          (p, nPairs)
-        }
-        val out = sub("canon_cc", n) {
-          // CC cost scales with the PAIR set, not the mint count — at a
-          // 0.98 threshold even a 10⁶ mint yields only ~10²-10³ near-dup
-          // pairs, and the distributed fixpoint's per-iteration job
-          // overhead dominated the §9i drive (108 s for 42 pairs while
-          // the cluster was loaded). Round-sized pair sets union-find on
-          // the driver (the §4.5 adaptive pattern); the distributed
-          // fixpoint remains for genuinely merge-heavy rounds.
-          val m =
-            if (nPairs == 0) Map.empty[Long, Long]
-            else if (nPairs <= 1000000)
-              unionFindMinId(pairs.as[(Long, Long)].collect())
-            // driverPairLimit = 0: this branch has already dispatched on
-            // nPairs > 1M, so skip the operator's own regime probe
-            else GraphOps.connectedComponents(pairs, driverPairLimit = 0L)
-              .filter(col("node") =!= col("component"))
-              .as[(Long, Long)].collect().toMap
-          (m, m.size.toLong)
-        }
-        val survivors =
-          if (out.isEmpty) vecs
-          else vecs.join(broadcast(out.keys.toSeq.toDF("vec_id")),
-            Seq("vec_id"), "left_anti")
-        // the surviving mint embeddings seed the decide cache: without
-        // this the next round's sync re-embeds every surviving mint — a
-        // duplicated full model pass per round with a real encoder.
-        // Bounded-chunk transfer: toLocalIterator streams one partition at
-        // a time, so the driver never double-buffers the full mint payload
-        // on top of the cache's own storage. (When the next round retrieves
-        // distributed — preloadWanted false — survivors reach it only
-        // through the checkpointed embedding store, and no vector ever
-        // lands on the driver.)
-        if (preloadWanted(out.size)) sub("canon_preload", n) {
-          var preloaded = 0L
-          survivors.as[(Long, Array[Float])].toLocalIterator().asScala
-            .grouped(65536).foreach { chunk =>
-              embCache.preload(chunk.map(_._1).toArray, chunk.map(_._2).toArray)
-              preloaded += chunk.size
-            }
-          ((), preloaded)
-        }
-        pairs.unpersist()
-        val added = sub("canon_apply", out.size.toLong) {
-          val a = applyMerge(taxo, out); (a, a.size.toLong)
-        }
-        CanonResult(out, added, lin.toSeq, survivors, () => { vecs.unpersist(); () })
+      val ids = newConcepts.map(_._2).toArray
+      val emb = sub("canon_embed", n)((models.emb.embedBatched(newConcepts.map(_._1)), n))
+      val m = sub("canon_cc", n) {
+        val mm = canonicalizeLocal(ids, emb, threshold); (mm, mm.size.toLong)
       }
+      finishLocal(ids, emb, m)
+    } else if (preloadWanted(0)) {
+      // every mint vector is headed for the driver cache: fetch them once
+      // through the bounded transfer (toLocalIterator streams one
+      // partition at a time, so spark.driver.maxResultSize never caps it)
+      // and band them here instead of in 8-band self-join + re-join jobs
+      val (ids, emb) = sub("canon_embed", n) {
+        val fetched = embedDistributed().as[(Long, Array[Float])]
+          .toLocalIterator().asScala.toArray.sortBy(_._1)
+        ((fetched.map(_._1), fetched.map(_._2)), fetched.length.toLong)
+      }
+      val m = sub("canon_cc", n) {
+        val mm = bandedLocal(ids, emb, threshold, models.emb.dim); (mm, mm.size.toLong)
+      }
+      finishLocal(ids, emb, m)
+    } else {
+      // Spark path: the vectors never transit the driver — LSH-blocked
+      // near-dup pairs + distributed connected components
+      val vecs = sub("canon_embed", n) {
+        val v = embedDistributed().persist()
+        (v, v.count())
+      }
+      // 256-bit/8-band signatures (32 sign bits per bucket key), NOT the
+      // q17 default (16/4): 4-bit buckets have only 16 distinct values
+      // per band, so a 10⁶-concept mint collapses into ~60k-member
+      // buckets → ~10¹¹ candidate pairs (measured: the 1M-candidate
+      // drive sat in this join indefinitely); 16-bit rows still admitted
+      // ~6×10⁷ random pairs at 10⁶ near-uniform vectors and OOM'd the
+      // verification join (embeddings are re-joined per candidate pair).
+      // 32-bit rows put random collisions at 2⁻³² per band (~10³ pairs
+      // at 10⁶ vectors); band recall stays ≥ 0.99 for the true-duplicate
+      // mints this merge targets (cos ≈ 1) — borderline-threshold pairs
+      // are sampled, the documented approximation vs the exact ≤10⁴
+      // driver path.
+      var nPairs = 0L
+      val pairs = sub("canon_pairs", n) {
+        // a zero-norm mint's cosine is NaN, which Spark orders above every
+        // double (NaN >= threshold holds): drop it, as the driver paths
+        // read a zero norm as cosine 0. SimOps keeps the NaN row because
+        // q17's oracle pins that operator's output.
+        val p = graft.ops.SimOps.cosineNearDupPairs(vecs, threshold,
+            bits = CanonBits, bands = CanonBands, dim = models.emb.dim)
+          .filter(!isnan(col("cos")))
+          .select(col("a"), col("b")).persist()
+        nPairs = p.count()
+        (p, nPairs)
+      }
+      val out = sub("canon_cc", n) {
+        // CC cost scales with the PAIR set, not the mint count — at a
+        // 0.98 threshold even a 10⁶ mint yields only ~10²-10³ near-dup
+        // pairs, and the distributed fixpoint's per-iteration job
+        // overhead dominated the §9i drive (108 s for 42 pairs while
+        // the cluster was loaded). Round-sized pair sets union-find on
+        // the driver (the §4.5 adaptive pattern); the distributed
+        // fixpoint remains for genuinely merge-heavy rounds.
+        val m =
+          if (nPairs == 0) Map.empty[Long, Long]
+          else if (nPairs <= 1000000)
+            GraphOps.unionFindMinId(pairs.as[(Long, Long)].collect())
+          // driverPairLimit = 0: this branch has already dispatched on
+          // nPairs > 1M, so skip the operator's own regime probe
+          else GraphOps.connectedComponents(pairs, driverPairLimit = 0L)
+            .filter(col("node") =!= col("component"))
+            .as[(Long, Long)].collect().toMap
+        (m, m.size.toLong)
+      }
+      val survivors =
+        if (out.isEmpty) vecs
+        else vecs.join(broadcast(out.keys.toSeq.toDF("vec_id")),
+          Seq("vec_id"), "left_anti")
+      // the surviving mint embeddings seed the decide cache: without
+      // this the next round's sync re-embeds every surviving mint — a
+      // duplicated full model pass per round with a real encoder.
+      // Bounded-chunk transfer: toLocalIterator streams one partition at
+      // a time, so the driver never double-buffers the full mint payload
+      // on top of the cache's own storage. (When the next round retrieves
+      // distributed — preloadWanted false — survivors reach it only
+      // through the checkpointed embedding store, and no vector ever
+      // lands on the driver.)
+      if (preloadWanted(out.size)) sub("canon_preload", n) {
+        var preloaded = 0L
+        survivors.as[(Long, Array[Float])].toLocalIterator().asScala
+          .grouped(65536).foreach { chunk =>
+            embCache.preload(chunk.map(_._1).toArray, chunk.map(_._2).toArray)
+            preloaded += chunk.size
+          }
+        ((), preloaded)
+      }
+      pairs.unpersist()
+      val added = sub("canon_apply", out.size.toLong) {
+        val a = applyMerge(taxo, out); (a, a.size.toLong)
+      }
+      CanonResult(out, added, lin.toSeq, () => survivors, () => { vecs.unpersist(); () })
+    }
   }
 
-  /** Driver-side canonicalization twin for round-sized concept sets (the
+  /** Near-dup signature geometry of canonicalize's banded regimes: 256
+    * sign bits in 8 bands of 32 rows (see the Spark branch for why). */
+  private val CanonBits = 256
+  private val CanonBands = 8
+
+  /** Cosine of two mint vectors rounded to 6 dp HALF_UP, as the Spark
+    * branch's `round(cosine_sim(a, b), 6)` computes it (CosineSimExpr's
+    * one-pass double accumulation, the same width fail-fast), except that a
+    * zero norm reads as 0.0 — never a NaN that would compare as a merge. */
+  private def cosine6(a: Array[Float], b: Array[Float]): Double = {
+    if (a.length != b.length)
+      throw new IllegalArgumentException(
+        s"cosine_sim: mismatched embedding widths ${a.length} vs ${b.length} " +
+          "— re-embed to a single width before comparing")
+    var dab = 0.0; var daa = 0.0; var dbb = 0.0
+    var i = 0
+    while (i < a.length) {
+      val x = a(i).toDouble; val y = b(i).toDouble
+      dab += x * y; daa += x * x; dbb += y * y
+      i += 1
+    }
+    val d = math.sqrt(daa) * math.sqrt(dbb)
+    if (d == 0) 0.0
+    else BigDecimal(dab / d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
+  /** Driver-side canonicalization for round-sized concept sets (the
     * per-round mint is bounded by maxCandidatesPerRound; a Spark job per
-    * few hundred driver-resident labels is pure scheduling overhead).
-    * Same semantics: exact cosine pairs ≥ threshold, union-find to min id. */
-  def canonicalizeLocal(newConcepts: Seq[(String, Long)],
-                        models: IconModels, threshold: Double): Map[Long, Long] =
-    canonicalizeLocal(newConcepts.map(_._2).toArray,
-      models.emb.embedBatched(newConcepts.map(_._1)), threshold)
-
-  /** Min-id union-find over an explicit pair list: dup -> canonical map for
-    * every non-root member. Same semantics as the distributed
-    * connectedComponents + min-component filter it stands in for. The
-    * canonical implementation moved to [[GraphOps.unionFindMinId]] (round
-    * 6: connectedComponents itself now regime-switches through it); this
-    * forwarder keeps the pipeline-local name the specs pin. */
-  private[graft] def unionFindMinId(pairs: Array[(Long, Long)]): Map[Long, Long] =
-    GraphOps.unionFindMinId(pairs)
-
+    * few hundred driver-resident labels is pure scheduling overhead):
+    * exact cosine pairs ≥ threshold, union-find to min id. */
   private def canonicalizeLocal(ids: Array[Long], emb: Array[Array[Float]],
                                 threshold: Double): Map[Long, Long] = {
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
+    val uf = new GraphOps.MinIdUnionFind(ids)
+    for (i <- ids.indices; j <- (i + 1) until ids.length)
+      if (cosine6(emb(i), emb(j)) >= threshold) uf.union(i, j)
+    uf.merges
+  }
+
+  /** The Spark branch's near-dup decision on driver-resident vectors:
+    * center on the per-dimension mean of the non-missing dims rounded to 6
+    * dp (SimOps.dimMeans), 256-bit signatures from the shared rhpSign plane
+    * family (BandedIndex.signature), 8 bands of 32 rows keyed
+    * `band << 48 | bucket` (SimOps.banded), and every same-bucket pair
+    * verified by [[cosine6]]. Pairs are unioned while each bucket is
+    * scanned, and a pair already in one component skips its cosine: that
+    * edge cannot change the components, and a hot bucket of k identical
+    * vectors costs O(k²) integer finds instead of O(k²) stored pairs.
+    * The caller passes `ids` ascending, which fixes the center's summation
+    * order run to run. */
+  private def bandedLocal(ids: Array[Long], emb: Array[Array[Float]],
+                          threshold: Double, dim: Int): Map[Long, Long] = {
+    val n = ids.length
+    val center = Array.tabulate(dim) { j =>
+      var s = 0.0; var c = 0L
+      for (v <- emb if j < v.length) { s += v(j).toDouble; c += 1 }
+      if (c == 0) 0.0
+      else BigDecimal(s / c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    def norm(a: Array[Float]) = math.sqrt(dot(a, a))
-    val pairs = mutable.ArrayBuffer.empty[(Long, Long)]
-    for (i <- ids.indices; j <- (i + 1) until ids.length) {
-      val d = norm(emb(i)) * norm(emb(j))
-      val cos = if (d == 0) 0.0 else
-        BigDecimal(dot(emb(i), emb(j)) / d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      if (cos >= threshold) pairs += ((ids(i), ids(j)))
+    val words = CanonBits / 64
+    val sigs = new Array[Array[Long]](n)
+    java.util.stream.IntStream.range(0, n).parallel().forEach { i =>
+      sigs(i) = graft.retrieve.BandedIndex.signature(emb(i), center, dim, words)
     }
-    // one union-find implementation in this file: min-id roots are
-    // identical with or without path compression, so reusing the
-    // compressed twin changes nothing but keeps the two paths from
-    // silently diverging
-    unionFindMinId(pairs.toArray)
+    val rows = CanonBits / CanonBands
+    val mask = (1L << rows) - 1
+    val uf = new GraphOps.MinIdUnionFind(ids)
+    val packed = new Array[Long](n)
+    for (b <- 0 until CanonBands) {
+      // the band's 32-bit buckets packed above the slot: after a sort each
+      // bucket (one `band << 48 | bucket` key) is a contiguous run with its
+      // members in ascending slot, hence ascending id, order
+      val bit = b * rows
+      for (i <- 0 until n)
+        packed(i) = (((sigs(i)(bit / 64) >>> (bit % 64)) & mask) << 32) | i
+      java.util.Arrays.sort(packed)
+      var s = 0
+      while (s < n) {
+        var e = s + 1
+        while (e < n && (packed(e) >>> 32) == (packed(s) >>> 32)) e += 1
+        for (x <- s until e; y <- (x + 1) until e) {
+          val (i, j) = (packed(x).toInt, packed(y).toInt)
+          if (uf.find(i) != uf.find(j) && cosine6(emb(i), emb(j)) >= threshold) uf.union(i, j)
+        }
+        s = e
+      }
+    }
+    uf.merges
   }
 
   /** Returns the edges actually added while re-pointing (for the round's
@@ -968,12 +1050,20 @@ object KgPipeline {
       else extractMentions(corpus, textCol, cfg.minMentionFreq))
       .persist()
 
-    val phase = mutable.LinkedHashMap.empty[String, Double]
+    // per-phase wall time, one `phase:<name>` row per phase per round in
+    // RunResult.lineage (the move phase counts as round rounds + 1, as its
+    // triples do); never written to a round's lineage parquet
+    val phaseNanos = mutable.LinkedHashMap.empty[String, Long]
     def timed[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val out = f
-      phase(name) = phase.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
+      phaseNanos(name) = phaseNanos.getOrElse(name, 0L) + (System.nanoTime() - t0)
       out
+    }
+    def phaseRows(round: Int): Unit = {
+      for ((name, ns) <- phaseNanos)
+        allLineage += LineageRow(round, -1, s"phase:$name", 0L, 0L, 0L, ns / 1000000)
+      phaseNanos.clear()
     }
 
     var r = resumeRound + 1
@@ -1214,7 +1304,7 @@ object KgPipeline {
         // rounds — the identical delta/compaction scheme the taxonomy and
         // scored store use, so resume reconstructs all three the same way
         if (embStore != null) {
-          val survivors = canonRes.survivorVecs.select(col("vec_id"), col("embedding"))
+          val survivors = canonRes.survivorVecs().select(col("vec_id"), col("embedding"))
           if (embFullWrite || compact) {
             pendingWrites += bg(embStore.union(survivors)
               .write.mode(SaveMode.Overwrite).parquet(s"$rd/embeddings"))
@@ -1257,6 +1347,7 @@ object KgPipeline {
         Files.write(Paths.get(s"$rd/meta.txt"), nextKey.toString.getBytes("UTF-8"))
         Files.write(commitMarker(ckptDir, r), Array.emptyByteArray)
       }
+      phaseRows(r)
       // crash injection for the kill+resume drive: hard-halt (no cleanup,
       // like SIGKILL) right after round N's checkpoint commits
       if (crashAfterRound.contains(r)) {
@@ -1373,8 +1464,7 @@ object KgPipeline {
       }
     }
 
-    if (sys.env.contains("GRAFT_PHASE_TIMES"))
-      println(phase.map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{\"phases\":{", ",", "}}"))
+    phaseRows(cfg.rounds + 1)
 
     // O(1) provenance lookup; getOrElseUpdate keeps the FIRST round an
     // edge was minted in (same as the linear find this replaces)

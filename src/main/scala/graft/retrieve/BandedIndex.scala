@@ -127,19 +127,35 @@ object BandedIndex {
     s
   }
 
+  /** Widest signature any driver caller asks for: 4 words = 256 planes
+    * (the canonicalize near-dup banding, SimOps.cosineNearDupPairs at
+    * bits = 256). */
+  val MaxWords = 4
+
   // ±1 planes, deterministic from the shared rhpSign family, memoized per
-  // dim (the plane table is ~64 KB at dim 64; instances and the incremental
-  // cache share one copy per JVM)
+  // dim (the plane table is ~128 KB at dim 64; instances and the
+  // incremental cache share one copy per JVM)
   private val planeCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Double]]]()
   private def planes(dim: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent(dim,
-      d => Array.tabulate(Bits, d)((b, i) => VectorExprs.rhpSign(b, i)))
+      d => Array.tabulate(64 * MaxWords, d)((b, i) => VectorExprs.rhpSign(b, i)))
 
   /** Two packed sign words (bits 0-63, 64-127) for one centered vector —
     * the signature function shared by index build, query probe, and the
     * cross-round signature cache. */
   def signature(v: Array[Float], center: Array[Double], dim: Int): (Long, Long) = {
+    val w = signature(v, center, dim, 2)
+    (w(0), w(1))
+  }
+
+  /** `words` packed sign words for one centered vector: bit b of word w is
+    * the sign of plane 64·w + b, the absolute plane index RhpSigExpr keys
+    * by (`bitOffset = 64·w`), so word w equals the column kernel's
+    * signature at that offset. */
+  def signature(v: Array[Float], center: Array[Double], dim: Int,
+                words: Int): Array[Long] = {
+    require(words >= 1 && words <= MaxWords, s"words must be in [1,$MaxWords], got $words")
     // same width fail-fast as the column kernel (RhpSigExpr): a vector
     // wider than the plane table would silently lose all mass above `dim`
     // from its signature — the twins must surface mixed-width inputs
@@ -152,17 +168,17 @@ object BandedIndex {
     var i = 0
     val m = math.min(v.length, dim)
     while (i < m) { x(i) = v(i).toDouble - center(i); i += 1 }
-    var w0 = 0L; var w1 = 0L
+    val out = new Array[Long](words)
     var b = 0
-    while (b < Bits) {
+    while (b < 64 * words) {
       val p = pl(b)
       var s = 0.0
       var j = 0
       while (j < dim) { s += x(j) * p(j); j += 1 }
-      if (s >= 0) { if (b < 64) w0 |= (1L << b) else w1 |= (1L << (b - 64)) }
+      if (s >= 0) out(b >> 6) |= (1L << (b & 63))
       b += 1
     }
-    (w0, w1)
+    out
   }
 }
 

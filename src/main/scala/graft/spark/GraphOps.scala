@@ -629,9 +629,24 @@ object GraphOps {
     * pipeline's canonicalize). Returns node → min-id-of-component for every
     * node whose root differs from itself. */
   private[graft] def unionFindMinId(pairs: Array[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = parent.getOrElseUpdate(x, x)
+    val index = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def slot(x: Long): Int = index.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val dense = pairs.map { case (a, b) => (slot(a), slot(b)) }
+    val uf = new MinIdUnionFind(ids.toArray)
+    for ((a, b) <- dense) uf.union(a, b)
+    uf.merges
+  }
+
+  /** Union-find over the dense slots `0 until ids.length`, each component
+    * rooted at its member with the smallest id — the one find/union behind
+    * [[unionFindMinId]] and the pipeline's driver canonicalize, which
+    * unions while it scans LSH buckets. */
+  private[graft] final class MinIdUnionFind(ids: Array[Long]) {
+    private val parent = Array.tabulate(ids.length)(identity)
+
+    def find(x: Int): Int = {
+      var r = x
       while (parent(r) != r) r = parent(r)
       // path compression: without it, min-id unions build chains whose
       // depth tracks the pair order (a descending-sorted dup cluster is
@@ -642,11 +657,17 @@ object GraphOps {
       while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    for ((a, b) <- pairs) {
+
+    /** Joins the components of slots `a` and `b`. */
+    def union(a: Int, b: Int): Unit = {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
     }
-    parent.keysIterator.map(k => k -> find(k)).filter { case (a, b) => a != b }.toMap
+
+    /** id → min id of its component, for every id that is not that min. */
+    def merges: Map[Long, Long] =
+      ids.indices.iterator.map(i => ids(i) -> ids(find(i)))
+        .filter { case (a, b) => a != b }.toMap
   }
 
   /** Connected components over an undirected edge set `(a, b)`: min-label

@@ -199,6 +199,26 @@ class OpsSpec extends SparkSpecBase {
     assert(messages(je).exists(_.contains("plane table")), messages(je).mkString(" | "))
   }
 
+  test("driver signature words equal the column kernel at each word's plane offset") {
+    // BandedIndex.signature(…, words) is the driver twin of the multi-word
+    // banding in SimOps.banded: word w must be rhpSig at bitOffset 64·w
+    // for the same center, full-width and narrow vectors alike
+    val dim = 16
+    val center = Array.tabulate(dim)(i => math.round(math.cos(i) * 1e5) / 1e6)
+    val vs = (0L until 40L).map { i =>
+      val w = if (i % 5 == 0) dim / 2 else dim
+      (i, Array.tabulate(w)(j => ((graft.lexical.Tokenset.fnv1a64(s"$i:$j") % 1000L) / 1000.0f)))
+    }
+    val cols = (0 until 4).map(w =>
+      SimOps.rhpSignature($"embedding", 64, dim, center.toSeq, bitOffset = 64 * w))
+    val viaSpark = vs.toDF("vec_id", "embedding")
+      .select($"vec_id" +: cols: _*).collect()
+      .map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
+    for ((id, v) <- vs)
+      assert(graft.retrieve.BandedIndex.signature(v, center, dim, 4).toSeq == viaSpark(id),
+        s"vec $id")
+  }
+
   test("ivf top-k: verified cosines exact, recall high, subset semantics") {
     val vecs = (0L until 200L).map { i =>
       (i, Array.tabulate(8)(j => ((graft.lexical.Tokenset.fnv1a64(s"$i:$j") % 1000L) / 1000.0f)))

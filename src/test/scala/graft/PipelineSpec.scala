@@ -25,6 +25,58 @@ object CountingEmbedder {
   def reset(): Unit = { calls.set(0); labels.set(0) }
 }
 
+/** Label-addressed 64-dim test vectors for the canonicalize twin tests:
+  * `bg-i` random unit vectors; `dup-k-j` and `hot-j` exact duplicates;
+  * `chain-c-s` steps of θ = acos(0.99) in a random plane, so neighbours
+  * pass 0.98 and the ends (2θ apart, cosine 0.96) do not; `up-k-j` and
+  * `dn-k-j` pairs whose cosine rounds at 6 dp to 0.98 and to 0.979999;
+  * `zero-k` zero vectors. */
+class PlantedEmbedder extends Embedder {
+  def dim: Int = 64
+  def embed(labels: Seq[String]): Array[Array[Float]] =
+    labels.map(PlantedEmbedder.vector).toArray
+}
+object PlantedEmbedder {
+  private def normalized(v: Array[Double]): Array[Double] = {
+    val n = math.sqrt(v.map(x => x * x).sum)
+    v.map(_ / n)
+  }
+  private def unit(seed: Long): Array[Double] = {
+    val r = new java.util.Random(seed)
+    normalized(Array.fill(64)(r.nextGaussian()))
+  }
+  /** a unit vector orthogonal to `u` */
+  private def ortho(u: Array[Double], seed: Long): Array[Double] = {
+    val g = unit(seed)
+    val d = g.zip(u).map { case (x, y) => x * y }.sum
+    normalized(g.zip(u).map { case (x, y) => x - d * y })
+  }
+  /** cos(a)·u + sin(a)·(unit orthogonal to u), both seeded */
+  private def turn(seed: Long, cosA: Double): Array[Float] = {
+    val u = unit(seed)
+    val w = ortho(u, seed + 500000L)
+    val sinA = math.sqrt(1 - cosA * cosA)
+    u.zip(w).map { case (x, y) => (cosA * x + sinA * y).toFloat }
+  }
+  def vector(label: String): Array[Float] = label.split("-") match {
+    case Array("bg", i) => unit(i.toLong).map(_.toFloat)
+    case Array("dup", k, _) => unit(1000000L + k.toLong).map(_.toFloat)
+    case Array("hot", _) => unit(2000000L).map(_.toFloat)
+    case Array("chain", c, st) =>
+      turn(3000000L + c.toLong, math.cos(st.toInt * math.acos(0.99)))
+    case Array("up", k, j) => turn(4000000L + k.toLong, if (j == "0") 1.0 else 0.97999975)
+    case Array("dn", k, j) => turn(4100000L + k.toLong, if (j == "0") 1.0 else 0.97999925)
+    case Array("zero", _) => new Array[Float](64)
+  }
+  /** cosine rounded to 6 dp, as canonicalize verifies pairs */
+  def cos6(a: String, b: String): Double = {
+    val (x, y) = (vector(a).map(_.toDouble), vector(b).map(_.toDouble))
+    val d = x.zip(y).map { case (p, q) => p * q }.sum /
+      (math.sqrt(x.map(p => p * p).sum) * math.sqrt(y.map(q => q * q).sum))
+    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+}
+
 /** End-to-end KG pipeline: extract→link→insert over the synthetic webtext
   * corpus; determinism across parallelism; resume-from-checkpoint equality
   * (SURVEY.md §5.3 item 5). */
@@ -58,6 +110,16 @@ class PipelineSpec extends SparkSpecBase {
       s"no mention placed under its head concept: ${triples.take(10)}")
     // lineage rows recorded per partition
     assert(res.lineage.count() > 0)
+    // one phase:<name> row per phase per round, in RunResult.lineage only
+    import spark.implicits._
+    val phases = res.lineage.filter(col("stage").startsWith("phase:"))
+      .select("round", "stage").as[(Int, String)].collect()
+    assert(phases.map(_._1).toSet == Set(1))
+    assert(Seq("candidates", "decide", "commit", "canonicalize", "checkpoint")
+      .forall(p => phases.contains((1, s"phase:$p"))), phases.mkString(", "))
+    assert(phases.length == phases.distinct.length)
+    assert(spark.read.parquet(s"$ckpt/round=1/lineage")
+      .filter(col("stage").startsWith("phase:")).count() == 0)
   }
 
   test("prior-score slice is bounded to candidate-relevant pairs (M4)") {
@@ -176,6 +238,135 @@ class PipelineSpec extends SparkSpecBase {
     val labs = CountingEmbedder.labels.get()
     assert(labs >= n, s"labels=$labs")
     assert(labs.toDouble / calls >= 32, s"$calls calls for $labs labels — per-row embedding?")
+  }
+
+  /** ~12k planted mints (ids from 100000, in label order) and a taxonomy
+    * holding them, each under one of five parents so merges re-point
+    * edges. */
+  private def plantedMints(hot: Int): (Seq[(String, Long)], () => graft.taxo.MutableTaxo) = {
+    val labels = (0 until hot).map(j => s"hot-$j") ++
+      (0 until 50).flatMap(k => (0 until 3).map(j => s"dup-$k-$j")) ++
+      (0 until 10).flatMap(c => (0 until 3).map(st => s"chain-$c-$st")) ++
+      (0 until 20).flatMap(k => Seq(s"up-$k-0", s"up-$k-1", s"dn-$k-0", s"dn-$k-1")) ++
+      Seq("zero-0", "zero-1")
+    val all = labels ++ (0 until 12000 - labels.size).map(i => s"bg-$i")
+    val concepts = all.zipWithIndex.map { case (l, i) => (l, 100000L + i) }
+    def taxo(): graft.taxo.MutableTaxo = {
+      val t = new graft.taxo.MutableTaxo
+      t.addNode(0L, Some("root"))
+      for (p <- 1L to 5L) { t.addNode(p, Some(s"parent $p")); t.addEdge(p, 0L, "original") }
+      for ((l, id) <- concepts) { t.addNode(id, Some(l)); t.addEdge(id, 1L + id % 5, "new") }
+      t
+    }
+    (concepts, () => taxo())
+  }
+
+  test("driver banded canonicalize equals the Spark branch on planted clusters") {
+    import spark.implicits._
+    val (concepts, taxo) = plantedMints(hot = 2000)
+    val models = KgPipeline.domainModels().copy(emb = new PlantedEmbedder)
+    // the planted geometry holds at the rounding the merge uses
+    for (c <- 0 until 10) {
+      assert(PlantedEmbedder.cos6(s"chain-$c-0", s"chain-$c-1") >= 0.98)
+      assert(PlantedEmbedder.cos6(s"chain-$c-0", s"chain-$c-2") < 0.98)
+    }
+    for (k <- 0 until 20) {
+      assert(PlantedEmbedder.cos6(s"up-$k-0", s"up-$k-1") == 0.98)
+      assert(PlantedEmbedder.cos6(s"dn-$k-0", s"dn-$k-1") == 0.979999)
+    }
+    val viaSpark = KgPipeline.canonicalize(spark, taxo(), concepts, models, 0.98)
+    val cache = new graft.retrieve.SnapshotEmbeddings(64)
+    val viaDriver = KgPipeline.canonicalize(spark, taxo(), concepts, models, 0.98, cache)
+    // the two regimes really ran: only the Spark branch has a pairs stage
+    assert(viaSpark.lineage.exists(_.stage == "canon_pairs"))
+    assert(!viaDriver.lineage.exists(_.stage == "canon_pairs"))
+    assert(viaDriver.merge == viaSpark.merge)
+    assert(viaDriver.addedEdges == viaSpark.addedEdges)
+    def survivors(r: KgPipeline.CanonResult) =
+      r.survivorVecs().select("vec_id").as[Long].collect().toSet
+    val kept = survivors(viaDriver)
+    assert(kept == survivors(viaSpark))
+    assert(cache.size == kept.size)
+    viaSpark.release()
+    // and the merge is the planted one
+    val id = concepts.toMap
+    val m = viaDriver.merge
+    assert((1 until 2000).forall(j => m.get(id(s"hot-$j")).contains(id("hot-0"))))
+    assert((0 until 50).forall(k =>
+      (1 until 3).forall(j => m.get(id(s"dup-$k-$j")).contains(id(s"dup-$k-0")))))
+    assert((0 until 10).exists(c => m.get(id(s"chain-$c-2")).contains(id(s"chain-$c-0"))),
+      "no chain merged end to end through its middle link")
+    assert((0 until 20).exists(k => m.get(id(s"up-$k-1")).contains(id(s"up-$k-0"))))
+    assert((0 until 20).forall(k => !m.contains(id(s"dn-$k-1"))))
+    assert(!m.contains(id("zero-0")) && !m.contains(id("zero-1")))
+    val expected = 1999 + 100 + (0 until 10).map(c =>
+      (1 to 2).count(st => m.contains(id(s"chain-$c-$st")))).sum +
+      (0 until 20).count(k => m.contains(id(s"up-$k-1")))
+    assert(m.size == expected, s"unplanted merges: ${m.size} vs $expected")
+  }
+
+  test("driver banded canonicalize submits at most defaultParallelism + 2 Spark jobs") {
+    val n = 12000
+    val taxo = new graft.taxo.MutableTaxo
+    val concepts = (0 until n).map(i => (s"alpha$i beta${i * 7} gamma${i * 13}", 100000L + i))
+    concepts.foreach { case (l, id) => taxo.addNode(id, Some(l)) }
+    val models = KgPipeline.domainModels()
+      .copy(emb = new CountingEmbedder(new HashNgramEmbedder(64)))
+    val sc = spark.sparkContext
+    val tag = "graft.test.canon"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, Option(e.properties).flatMap(p => Option(p.getProperty(tag))).getOrElse(""))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ended.add(e.jobId); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    CountingEmbedder.reset()
+    val res =
+      try {
+        sc.setLocalProperty(tag, "canon")
+        val r = KgPipeline.canonicalize(spark, taxo, concepts, models, 0.999,
+          new graft.retrieve.SnapshotEmbeddings(64))
+        // the listener bus is FIFO: once this marker job's end is seen,
+        // every job canonicalize submitted has been counted
+        sc.setLocalProperty(tag, "marker")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 60L * 1000000000L
+        def markerDone = jobs.entrySet().stream()
+          .anyMatch(e => e.getValue == "marker" && ended.contains(e.getKey))
+        while (!markerDone) {
+          assert(System.nanoTime() < deadline, "listener bus did not drain")
+          Thread.sleep(5)
+        }
+        r
+      } finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
+    val canonJobs = jobs.values().stream().filter(_ == "canon").count()
+    assert(!res.lineage.exists(_.stage == "canon_pairs"), "driver regime did not run")
+    assert(canonJobs <= sc.defaultParallelism + 2,
+      s"$canonJobs jobs for a driver-regime canonicalize")
+    // the executor-side embedding keeps the batch-64 model contract (M1)
+    val (calls, labs) = (CountingEmbedder.calls.get(), CountingEmbedder.labels.get())
+    assert(labs == n && labs.toDouble / calls >= 32, s"$calls calls for $labs labels")
+  }
+
+  test("Spark canonicalize never merges zero-norm mints") {
+    // a zero vector's cosine is NaN, and Spark orders NaN above every
+    // double: unfiltered, `cos >= threshold` merged any two of them
+    val concepts = (Seq("zero-0", "zero-1") ++ (0 until 11998).map(i => s"bg-$i"))
+      .zipWithIndex.map { case (l, i) => (l, 100000L + i) }
+    val taxo = new graft.taxo.MutableTaxo
+    concepts.foreach { case (l, id) => taxo.addNode(id, Some(l)) }
+    val models = KgPipeline.domainModels().copy(emb = new PlantedEmbedder)
+    val res = KgPipeline.canonicalize(spark, taxo, concepts, models, 0.98)
+    assert(res.lineage.exists(_.stage == "canon_pairs"), "Spark branch did not run")
+    assert(res.merge.isEmpty, s"merged: ${res.merge}")
+    res.release()
   }
 
   test("decide index is incremental across rounds (R3/R5): round 2 embeds only the delta") {
@@ -388,7 +579,7 @@ class PipelineSpec extends SparkSpecBase {
         driverPairLimit = 0L)
       .filter(col("node") =!= col("component"))
       .as[(Long, Long)].collect().toMap
-    assert(KgPipeline.unionFindMinId(pairs.toArray) == dist)
+    assert(graft.spark.GraphOps.unionFindMinId(pairs.toArray) == dist)
   }
 
   test("connectedComponents driver regime equals the distributed fixpoint") {
@@ -413,7 +604,7 @@ class PipelineSpec extends SparkSpecBase {
     // multi-minute stall at this size, milliseconds with compression
     val n = 100000
     val pairs = Array.tabulate(n)(i => ((n - 1 - i).toLong, (n - i).toLong))
-    val m = KgPipeline.unionFindMinId(pairs)
+    val m = graft.spark.GraphOps.unionFindMinId(pairs)
     assert(m.size == n)
     assert((1 to n).forall(k => m(k.toLong) == 0L))
   }

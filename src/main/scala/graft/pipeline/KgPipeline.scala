@@ -712,18 +712,12 @@ object KgPipeline {
       val out = sub("canon_cc", n) {
         // CC cost scales with the PAIR set, not the mint count — at a
         // 0.98 threshold even a 10⁶ mint yields only ~10²-10³ near-dup
-        // pairs, and the distributed fixpoint's per-iteration job
-        // overhead dominated the §9i drive (108 s for 42 pairs while
-        // the cluster was loaded). Round-sized pair sets union-find on
-        // the driver (the §4.5 adaptive pattern); the distributed
-        // fixpoint remains for genuinely merge-heavy rounds.
+        // pairs; connectedComponents union-finds round-sized pair sets on
+        // the driver and keeps its distributed fixpoint for genuinely
+        // merge-heavy rounds.
         val m =
           if (nPairs == 0) Map.empty[Long, Long]
-          else if (nPairs <= 1000000)
-            GraphOps.unionFindMinId(pairs.as[(Long, Long)].collect())
-          // driverPairLimit = 0: this branch has already dispatched on
-          // nPairs > 1M, so skip the operator's own regime probe
-          else GraphOps.connectedComponents(pairs, driverPairLimit = 0L)
+          else GraphOps.connectedComponents(pairs)
             .filter(col("node") =!= col("component"))
             .as[(Long, Long)].collect().toMap
         (m, m.size.toLong)

@@ -1,8 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Distributed DataFrame graph algorithms over an edge table
   * `edges(src LONG, dst LONG)` where src = child and dst = parent
@@ -15,12 +18,22 @@ import org.apache.spark.storage.StorageLevel
   * distributed axis (SURVEY.md §2.2). Iteration counts are bounded by graph
   * depth; every loop persists + localCheckpoints its frontier to cut lineage.
   *
+  * Regime switch: closure, leaves, edge-node depths, transitive reduction
+  * and connected components each probe their edge table ONCE through
+  * [[driverEdges]]. A table of at most `driverEdgeLimit` raw rows (default
+  * [[DriverEdgeLimit]]; 0 forces the distributed path) comes back as two
+  * primitive `Array[Long]` columns and is solved by a local worklist twin —
+  * identical output rows, equivalence-tested — whose result becomes a
+  * DataFrame through the one builder [[localDF]]. Larger tables run the
+  * distributed fixpoint, and a twin that falls back hands that decision on
+  * instead of probing again.
+  *
   * Join strategy inside the fixpoints is SIZE-ADAPTIVE (optimization guide
   * §3.1): a localCheckpointed frontier/closure is RDD-backed, so Spark's
   * size estimate is `defaultSizeInBytes` (huge) and the planner would pick
   * a full shuffle join for a 50-row frontier. Every loop already knows the
   * EXACT row count of its materialized tables (the convergence probe), so
-  * tables under [[broadcastRowLimit]] get an explicit broadcast hint and
+  * tables under [[BroadcastRowLimit]] get an explicit broadcast hint and
   * larger ones keep the shuffle plan — the hint is a plan choice only,
   * results are identical, and at 100 TB scale the counts exceed the limit
   * and the shuffle path is what runs.
@@ -38,91 +51,147 @@ object GraphOps {
 
   /** Max row count for an adaptive broadcast hint inside the fixpoints.
     * 1M (long, long) rows is ~30 MB as a built hash relation — safely under
-    * executor memory on any sane deployment; override per session with
-    * `spark.conf.set("graft.broadcastRowLimit", n)` (0 disables hinting).
-    * This is a scale-adaptive plan choice, not a tuning constant: the
-    * decision input is the exact measured row count of the loop's own
-    * checkpointed table, so production-size graphs automatically exceed the
-    * limit and keep the shuffle join. */
-  private def broadcastRowLimit(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.broadcastRowLimit", "1000000").toLong
+    * executor memory on any sane deployment. The decision input is the
+    * exact measured row count of the loop's own checkpointed table, so
+    * production-size graphs exceed the limit and keep the shuffle join. */
+  private val BroadcastRowLimit = 1000000L
 
-  /** Broadcast-hint `df` when its known exact row count is within the
-    * session's limit; otherwise return it unchanged (shuffle join).
+  /** Default driver-regime edge bound: at most this many raw edge rows are
+    * collected (16 MB as two `Array[Long]`) and solved locally. */
+  private val DriverEdgeLimit = 1000000L
+
+  /** The closure's ROW count is not bounded by the edge count (a 1M-edge
+    * deep DAG can close to billions of pairs), so the local closure aborts
+    * past this many pairs and the distributed fixpoint runs instead — the
+    * wasted local work is bounded by the cap. At the cap the closure is
+    * two 8M-entry `Array[Long]` (128 MB): closing a 4000-node chain
+    * (7,998,000 pairs, JDK 17, G1, 3 GB heap) leaves 122 MiB of driver heap
+    * in use after a full GC while its DataFrame is held. */
+  private val DriverClosureLimit = 8000000L
+
+  /** [[localDF]] outputs up to this many rows are a LocalRelation; larger
+    * ones an RDD of ~[[LocalSliceRows]]-row partitions (a multi-million-row
+    * LocalRelation would serialize whole into every plan using it), built
+    * from [[LocalChunkRows]]-row array chunks: 256 KB per column stays
+    * below G1's humongous-object threshold, where a 4 MB slice would
+    * occupy whole regions and inflate the driver heap by up to 40%. */
+  private val LocalRelationRows = 100000
+  private val LocalSliceRows = 500000
+  private val LocalChunkRows = 32768
+
+  /** Broadcast-hint `df` when its known exact row count is within
+    * [[BroadcastRowLimit]]; otherwise return it unchanged (shuffle join).
     * private[graft]: callers that already hold an exact count (e.g.
     * TrainDataOps over a counted closure) reuse the same adaptive rule. */
   private[graft] def hinted(df: DataFrame, exactRows: Long): DataFrame =
-    if (exactRows <= broadcastRowLimit(df)) broadcast(df) else df
+    if (exactRows <= BroadcastRowLimit) broadcast(df) else df
 
-  /** Driver-regime edge bound for the closure/depth/TR fixpoints (the
-    * connectedComponents pattern): an edge table whose EXACT measured count
-    * is within this limit is collected (≤ ~16 MB at the 1M default) and the
-    * graph op runs as a local worklist algorithm — identical output,
-    * equivalence-tested — while larger graphs run the distributed fixpoint.
-    * Override per session with `graft.graphDriverEdgeLimit` (0 disables the
-    * driver regime). */
-  private def graphDriverEdgeLimit(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graphDriverEdgeLimit", "1000000").toLong
-
-  /** The closure's ROW count is not bounded by the edge count (a 1M-edge
-    * deep DAG can close to billions of pairs), so the local closure attempt
-    * aborts past this many pairs and falls back to the distributed fixpoint
-    * — the wasted local work is bounded by the cap. ~8M (long, long) pairs
-    * is ~128 MB of driver arrays. `graft.graphDriverClosureLimit`. */
-  private def graphDriverClosureLimit(df: DataFrame): Long =
-    df.sparkSession.conf.get("graft.graphDriverClosureLimit", "8000000").toLong
-
-  private def isLongLong(df: DataFrame): Boolean =
-    df.schema.fields.length >= 2 &&
-      df.schema.fields.take(2).forall(_.dataType == org.apache.spark.sql.types.LongType)
-
-  /** Materialize a driver-computed pair list: a LocalRelation for small
-    * results, an RDD partitioned every ~500k rows beyond (a multi-million-
-    * row LocalRelation would serialize whole into every plan using it). */
-  private def localPairsDF(spark: SparkSession, rows: Array[(Long, Long)],
-                           c1: String, c2: String): org.apache.spark.sql.DataFrame = {
+  /** The regime probe. `df` is a two-column edge table; when both columns
+    * are long and it has at most `cap` rows, returns its raw rows as paired
+    * primitive arrays — one `limit(cap + 1)` collect detects overflow in
+    * one pass, with no distributed distinct or count first. None means
+    * over the cap (or `cap` = 0, or not long-typed): run distributed. Every
+    * local twin is duplicate-edge-insensitive, so the raw rows suffice; the
+    * boundary is the RAW row count (a table over the cap only in duplicates
+    * runs distributed, which distincts it). */
+  private def driverEdges(df: DataFrame, cap: Long): Option[(Array[Long], Array[Long])] = {
+    val spark = df.sparkSession
     import spark.implicits._
-    if (rows.length <= 100000) spark.createDataFrame(rows.toSeq).toDF(c1, c2)
-    else spark.sparkContext
-      .parallelize(rows.toSeq, math.max(1, rows.length / 500000)).toDF(c1, c2)
+    if (cap <= 0 || df.schema.fields.exists(_.dataType != LongType)) None
+    else {
+      val n = math.min(cap, Int.MaxValue - 2L).toInt
+      val rows = df.limit(n + 1).as[(Long, Long)].collect()
+      if (rows.length > n) None else Some(rows.unzip)
+    }
   }
 
-  /** Local upward-reachability closure over a collected edge list: for each
-    * node, BFS over the parent adjacency — EXACTLY the distributed
-    * fixpoint's semantics, including self-pairs reachable through cycles
-    * (seed (a,b),(b,a) closes to (a,a)). Returns None past `cap` pairs. */
-  private def localClosure(edgeArr: Array[(Long, Long)],
-                           cap: Long): Option[Array[(Long, Long)]] = {
-    val parents = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-    edgeArr.foreach { case (s, d) =>
-      parents.computeIfAbsent(s, _ => new java.util.ArrayList[Long]()).add(d)
+  /** The one builder for driver-computed tables: equal-length long columns
+    * become a LocalRelation up to [[LocalRelationRows]] rows, and beyond
+    * that an RDD of `n / LocalSliceRows` partitions (at least one) over
+    * chunks sliced from the arrays. */
+  private def localDF(spark: SparkSession, cols: (String, Array[Long])*): DataFrame = {
+    val schema = StructType(cols.map { case (c, _) => StructField(c, LongType, nullable = false) })
+    val arrs = cols.map(_._2).toArray
+    val n = arrs(0).length
+    def rows(a: Array[Array[Long]]): Iterator[Row] =
+      Iterator.range(0, a(0).length).map(i => Row.fromSeq(a.map(_(i)).toSeq))
+    if (n <= LocalRelationRows) spark.createDataFrame(rows(arrs).toSeq.asJava, schema)
+    else {
+      val chunks = (0 until n by LocalChunkRows).map(s => arrs.map(_.slice(s, s + LocalChunkRows)))
+      spark.createDataFrame(spark.sparkContext
+        .parallelize(chunks, math.max(1, n / LocalSliceRows)).flatMap(rows), schema)
     }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val seen = new java.util.HashSet[Long]()
-    val stack = new java.util.ArrayDeque[Long]()
-    val it = parents.keySet().iterator()
-    while (it.hasNext) {
-      val n = it.next()
-      seen.clear(); stack.clear()
-      stack.push(n)
-      while (!stack.isEmpty) {
-        val cur = stack.pop()
-        val ps = parents.get(cur)
-        if (ps != null) {
-          var i = 0
-          while (i < ps.size()) {
-            val p = ps.get(i)
-            if (seen.add(p)) {
-              out += ((n, p))
-              if (out.length > cap) return None
-              stack.push(p)
-            }
-            i += 1
+  }
+
+  /** Sorted distinct values of the arrays: the dense node index of the
+    * local twins (a node's slot is its binary-search position). */
+  private def sortedIds(arrs: Array[Long]*): Array[Long] = {
+    val all = Array.concat(arrs: _*)
+    java.util.Arrays.sort(all)
+    var k = 0
+    var i = 0
+    while (i < all.length) {
+      if (k == 0 || all(k - 1) != all(i)) { all(k) = all(i); k += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(all, k)
+  }
+
+  private def slot(ids: Array[Long], x: Long): Int = java.util.Arrays.binarySearch(ids, x)
+
+  /** Edges `from(i) → to(i)` over the slots of `ids`, in compressed-row
+    * form: the targets of slot v are `tgt(off(v) until off(v + 1))`, in
+    * edge order. */
+  private final class Adjacency(ids: Array[Long], from: Array[Long], to: Array[Long]) {
+    val off = new Array[Int](ids.length + 1)
+    val tgt = new Array[Int](from.length)
+    locally {
+      val f = from.map(slot(ids, _))
+      f.foreach(v => off(v + 1) += 1)
+      for (v <- ids.indices) off(v + 1) += off(v)
+      val fill = off.clone()
+      for (i <- f.indices) { tgt(fill(f(i))) = slot(ids, to(i)); fill(f(i)) += 1 }
+    }
+  }
+
+  /** Local upward-reachability closure: for each node, DFS over the parent
+    * adjacency `up` — EXACTLY the distributed fixpoint's semantics,
+    * including self-pairs reachable through cycles (seed (a,b),(b,a)
+    * closes to (a,a)). Node slot v's ancestors are `anc(start(v) until
+    * start(v + 1))`. None past `cap` pairs. */
+  private def localClosure(ids: Array[Long], up: Adjacency,
+                           cap: Long): Option[(Array[Long], Array[Int])] = {
+    val anc = new scala.collection.mutable.ArrayBuilder.ofLong
+    val start = new Array[Int](ids.length + 1)
+    val mark = Array.fill(ids.length)(-1) // slot → last source that reached it
+    val stack = new Array[Int](ids.length + 1)
+    var n = 0
+    var v = 0
+    while (v < ids.length) {
+      start(v) = n
+      stack(0) = v
+      var top = 1
+      while (top > 0) {
+        top -= 1
+        val cur = stack(top)
+        var j = up.off(cur)
+        while (j < up.off(cur + 1)) {
+          val p = up.tgt(j)
+          if (mark(p) != v) {
+            mark(p) = v
+            anc += ids(p)
+            n += 1
+            if (n > cap) return None
+            stack(top) = p
+            top += 1
           }
+          j += 1
         }
       }
+      v += 1
     }
-    Some(out.toArray)
+    start(ids.length) = n
+    Some((anc.result(), start))
   }
 
   /** Transitive closure pairs (node, ancestor), excluding self-pairs —
@@ -130,11 +199,10 @@ object GraphOps {
     * frontier expansion: O(depth) shuffles, each a join on the frontier
     * (small) against the edge table — not closure×closure squaring, so the
     * shuffle volume stays proportional to the closure size. Edge tables
-    * within [[graphDriverEdgeLimit]] run the local worklist twin instead
-    * (regime switch; pass `driverEdgeLimit = 0` to force distributed).
+    * within `driverEdgeLimit` run the local worklist twin instead.
     */
   def ancestorClosure(edges: DataFrame, maxIter: Int = 64,
-                      driverEdgeLimit: Long = -1L): DataFrame =
+                      driverEdgeLimit: Long = DriverEdgeLimit): DataFrame =
     ancestorClosureCounted(edges, maxIter, driverEdgeLimit)._1
 
   /** [[ancestorClosure]] plus the closure's exact row count — callers that
@@ -142,31 +210,21 @@ object GraphOps {
     * count for the adaptive broadcast decision without a second job. */
   private[graft] def ancestorClosureCounted(
       edges: DataFrame, maxIter: Int = 64,
-      driverEdgeLimit: Long = -1L): (DataFrame, Long) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+      driverEdgeLimit: Long = DriverEdgeLimit): (DataFrame, Long) = {
     val projected = edges.select(col("src").as("node"), col("dst").as("anc"))
-    val edgeLimit =
-      if (driverEdgeLimit >= 0) driverEdgeLimit else graphDriverEdgeLimit(edges)
-    // driver regime probe BEFORE any distributed work: collect the RAW
-    // edge rows under the cap (limit(cap+1) detects overflow in one job —
-    // the TR pattern). The worklist closure is duplicate-edge-insensitive
-    // (`seen` guards every push), so skipping the distributed distinct +
-    // localCheckpoint + count (three jobs) changes no output row; the
-    // regime boundary is now the RAW row count (stricter — a table over
-    // the cap only in duplicates falls back to the distributed loop,
-    // which distincts it as before).
-    if (edgeLimit > 0 && isLongLong(projected)) {
-      val cap = math.min(edgeLimit, Int.MaxValue - 2L).toInt
-      val raw = projected.limit(cap + 1).as[(Long, Long)].collect()
-      if (raw.length <= cap) {
-        localClosure(raw, graphDriverClosureLimit(edges)) match {
-          case Some(pairs) =>
-            return (localPairsDF(spark, pairs, "node", "anc"), pairs.length.toLong)
-          case None => () // closure larger than the driver cap: fall through
-        }
+    val local = driverEdges(projected, driverEdgeLimit).flatMap { case (src, dst) =>
+      val ids = sortedIds(src, dst)
+      localClosure(ids, new Adjacency(ids, src, dst), DriverClosureLimit).map {
+        case (anc, start) =>
+          val node = new Array[Long](anc.length)
+          for (v <- ids.indices) java.util.Arrays.fill(node, start(v), start(v + 1), ids(v))
+          (localDF(edges.sparkSession, "node" -> node, "anc" -> anc), anc.length.toLong)
       }
     }
+    local.getOrElse(distributedClosure(projected, maxIter))
+  }
+
+  private def distributedClosure(projected: DataFrame, maxIter: Int): (DataFrame, Long) = {
     // localCheckpoint (not just persist): the frontier unions below mix this
     // seed with checkpointed RDD-backed plans; leaving a LocalRelation-
     // shaped child under the Union trips constraint rewriting
@@ -224,133 +282,64 @@ object GraphOps {
   def roots(nodes: DataFrame, edges: DataFrame): DataFrame =
     nodes.join(edges.select(col("src").as("__c")), col("id") === col("__c"), "left_anti")
 
-  /** Raw edge rows collected under the driver-regime cap, or None when the
-    * table exceeds it (limit(cap+1) detects overflow in ONE job — no
-    * distributed distinct/count first). Shared probe for the driver fast
-    * paths; callers' kernels must be duplicate-edge-insensitive. */
-  private def rawEdgeProbe(edges: DataFrame,
-                           driverEdgeLimit: Long): Option[Array[(Long, Long)]] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val projected = edges.select(col("src"), col("dst"))
-    val edgeLimit =
-      if (driverEdgeLimit >= 0) driverEdgeLimit else graphDriverEdgeLimit(edges)
-    if (edgeLimit > 0 && isLongLong(projected)) {
-      val cap = math.min(edgeLimit, Int.MaxValue - 2L).toInt
-      val raw = projected.limit(cap + 1).as[(Long, Long)].collect()
-      if (raw.length <= cap) Some(raw) else None
-    } else None
-  }
-
-  /** One-column id DataFrame for a driver-computed node list (the
-    * localPairsDF sizing rule). */
-  private def localIdsDF(spark: org.apache.spark.sql.SparkSession,
-                         ids: Array[Long], name: String): DataFrame = {
-    import spark.implicits._
-    if (ids.length <= 100000) spark.createDataFrame(ids.toSeq.map(Tuple1(_))).toDF(name)
-    else spark.sparkContext
-      .parallelize(ids.toSeq, math.max(1, ids.length / 500000)).toDF(name)
-  }
+  /** The node table `distinct(src ∪ dst)` of an edge table. */
+  private def edgeNodes(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
 
   /** [[leaves]] specialized to the common `nodes ≡ distinct(src ∪ dst)`
-    * derivation: edge tables under the driver cap are collected once (raw,
-    * one job) and the leaf set — distinct srcs that never appear as a dst
-    * (a dst row is its own parent's child, never a leaf) — is computed
-    * locally; output rows are identical to
-    * `leaves(distinct(src ∪ dst), edges)` (one row per leaf id, order
+    * derivation: under the driver cap the leaf set — distinct srcs that
+    * never appear as a dst (a dst row is its own parent's child, never a
+    * leaf) — is computed from the probed arrays; output rows are identical
+    * to `leaves(distinct(src ∪ dst), edges)` (one row per leaf id, order
     * irrelevant to every caller, which sorts). Over-cap tables run exactly
     * that distributed anti-join, with the edge table materialized once. */
-  def leavesOfEdgeNodes(edges: DataFrame, driverEdgeLimit: Long = -1L): DataFrame = {
-    val spark = edges.sparkSession
-    rawEdgeProbe(edges, driverEdgeLimit) match {
-      case Some(raw) =>
-        val dst = new java.util.HashSet[Long]()
-        raw.foreach { case (_, d) => dst.add(d) }
-        val seen = new java.util.HashSet[Long]()
-        val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-        raw.foreach { case (s, _) => if (!dst.contains(s) && seen.add(s)) out += s }
-        localIdsDF(spark, out.toArray, "id")
+  def leavesOfEdgeNodes(edges: DataFrame,
+                        driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+    val e0 = edges.select(col("src"), col("dst"))
+    driverEdges(e0, driverEdgeLimit) match {
+      case Some((src, dst)) =>
+        val parents = sortedIds(dst)
+        localDF(edges.sparkSession,
+          "id" -> sortedIds(src).filter(s => slot(parents, s) < 0))
       case None =>
-        val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-        val ids = e.select(col("src").as("id"))
-          .union(e.select(col("dst").as("id"))).distinct()
-        leaves(ids, e)
+        val e = e0.localCheckpoint(true)
+        leaves(edgeNodes(e), e)
     }
   }
 
   /** [[depths]] specialized to `nodes ≡ distinct(src ∪ dst)`: under the
-    * driver cap the node set derives from the one collected edge list (no
-    * separate distributed distinct + node collect), output rows identical
-    * to `depths(distinct(src ∪ dst), edges)` — that derivation emits one
-    * row per id, exactly the BFS's per-id emission. */
+    * driver cap a multi-source BFS from the root set over the probed arrays
+    * — duplicate edges are no-ops (the depth guard) — with output rows
+    * identical to `depths(distinct(src ∪ dst), edges)`: one row per id the
+    * BFS reaches, as the distinct'd frontier emits them. */
   def depthsOfEdgeNodes(edges: DataFrame, maxIter: Int = 64,
-                        driverEdgeLimit: Long = -1L): DataFrame = {
-    val spark = edges.sparkSession
-    rawEdgeProbe(edges, driverEdgeLimit) match {
-      case Some(raw) =>
-        val seen = new java.util.HashSet[Long]()
-        val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-        raw.foreach { case (s, d) =>
-          if (seen.add(s)) ids += s
-          if (seen.add(d)) ids += d
-        }
-        localDepthsDF(spark, ids.toArray, raw)
-      case None =>
-        val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-        val ids = e.select(col("src").as("id"))
-          .union(e.select(col("dst").as("id"))).distinct()
-        // the probe already established the table is over the cap (or not
-        // long-typed): driverEdgeLimit = 0 skips depths' identical re-probe
-        depths(ids, e, maxIter, driverEdgeLimit = 0L)
-    }
-  }
-
-  /** Driver twin of the depths fixpoint: multi-source BFS from the root
-    * set over a collected edge list. Root rows are emitted once per
-    * node-array occurrence (exactly as roots() would), discovered
-    * non-roots once per id; duplicate edges are no-ops (depthOf guard).
-    * Shared by [[depths]]'s driver regime and [[depthsOfEdgeNodes]]. */
-  private def localDepthsDF(spark: org.apache.spark.sql.SparkSession,
-                            nodeArr: Array[Long],
-                            edgeArr: Array[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    val children = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-    val isChild = new java.util.HashSet[Long]()
-    edgeArr.foreach { case (s, d) =>
-      children.computeIfAbsent(d, _ => new java.util.ArrayList[Long]()).add(s)
-      isChild.add(s)
-    }
-    val depthOf = new java.util.HashMap[Long, Int]()
-    var frontier = nodeArr.iterator.filter(!isChild.contains(_)).toArray.distinct
-    frontier.foreach(depthOf.put(_, 0))
-    var d = 0
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    // root rows per node-array occurrence (duplicate node rows stay
-    // duplicated, exactly as roots() would emit them)
-    nodeArr.foreach(n => if (!isChild.contains(n)) out += ((n, 0)))
-    while (frontier.nonEmpty) {
-      d += 1
-      val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { p =>
-        val cs = children.get(p)
-        if (cs != null) {
-          var i = 0
-          while (i < cs.size()) {
-            val c = cs.get(i)
-            if (!depthOf.containsKey(c)) {
-              depthOf.put(c, d); next += c; out += ((c, d))
-            }
-            i += 1
+                        driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+    val e0 = edges.select(col("src"), col("dst"))
+    driverEdges(e0, driverEdgeLimit) match {
+      case Some((src, dst)) =>
+        val ids = sortedIds(src, dst)
+        val down = new Adjacency(ids, dst, src)
+        // roots (never a child) start at depth 0; unreached ids stay at MaxValue
+        val depth = Array.fill(ids.length)(0L)
+        src.foreach(s => depth(slot(ids, s)) = Long.MaxValue)
+        var frontier = ids.indices.toArray.filter(depth(_) == 0L)
+        var d = 0L
+        while (frontier.nonEmpty) {
+          d += 1
+          val next = Array.newBuilder[Int]
+          for (p <- frontier; j <- down.off(p) until down.off(p + 1)) {
+            val c = down.tgt(j)
+            if (depth(c) == Long.MaxValue) { depth(c) = d; next += c }
           }
+          frontier = next.result()
         }
-      }
-      frontier = next.toArray
+        val reached = ids.indices.toArray.filter(depth(_) < Long.MaxValue)
+        localDF(edges.sparkSession, "id" -> reached.map(ids), "depth" -> reached.map(depth))
+          .withColumn("depth", col("depth").cast("int"))
+      case None =>
+        val e = e0.localCheckpoint(true)
+        depths(edgeNodes(e), e, maxIter)
     }
-    if (out.length <= 100000)
-      spark.createDataFrame(out.toSeq).toDF("id", "depth")
-    else spark.sparkContext
-      .parallelize(out.toSeq, math.max(1, out.length / 500000))
-      .toDF("id", "depth")
   }
 
   /** Per-node min distance from any root — distributed `annotate_levels`
@@ -362,37 +351,8 @@ object GraphOps {
     * per-iteration min-aggregation or depth comparison join (each iteration
     * is one distinct + one anti-join, both on the frontier, not the level
     * table). */
-  def depths(nodes: DataFrame, edges: DataFrame, maxIter: Int = 64,
-             driverEdgeLimit: Long = -1L): DataFrame = {
-    val projected = edges.select(col("src"), col("dst"))
-    val edgeLimit =
-      if (driverEdgeLimit >= 0) driverEdgeLimit else graphDriverEdgeLimit(edges)
-    if (edgeLimit > 0 && isLongLong(projected) &&
-        nodes.schema.fields.exists(f => f.name == "id" &&
-          f.dataType == org.apache.spark.sql.types.LongType)) {
-      // driver regime: multi-source BFS from the root set over the collected
-      // edge list — identical rows to the distributed fixpoint (roots emit
-      // one row PER NODE-TABLE OCCURRENCE like roots(), discovered non-roots
-      // one row per id like the distinct'd frontier). The RAW edge rows are
-      // collected under the cap (limit(cap+1) detects overflow in one job,
-      // the TR/closure pattern — no distributed distinct + checkpoint +
-      // count first): the BFS is duplicate-edge-insensitive (the depthOf /
-      // isChild guards make a repeated edge a no-op), so output rows are
-      // identical; the regime boundary is the RAW row count (stricter —
-      // duplicate-heavy tables fall back to the distributed loop, which
-      // distincts as before). Node table collected under the same cap.
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val cap = math.min(edgeLimit, Int.MaxValue - 2L).toInt
-      val rawEdges = projected.limit(cap + 1).as[(Long, Long)].collect()
-      val nodeArr =
-        if (rawEdges.length <= cap)
-          nodes.select(col("id")).limit(cap + 1).as[Long].collect()
-        else Array.empty[Long]
-      if (rawEdges.length <= cap && nodeArr.length <= cap)
-        return localDepthsDF(spark, nodeArr, rawEdges)
-    }
-    val e = projected.distinct().localCheckpoint(true)
+  def depths(nodes: DataFrame, edges: DataFrame, maxIter: Int = 64): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
     val eCount = e.count()
     var level = roots(nodes, edges).select(col("id"), lit(0).as("depth"))
       .localCheckpoint(true)
@@ -430,66 +390,52 @@ object GraphOps {
 
   /** Distributed transitive reduction (G18, taxonomy.py:620-629): an edge
     * (u,v) is redundant iff a path u→…→v of length ≥ 2 exists, i.e. some
-    * other parent p of u reaches v through the closure. */
-  def transitiveReduction(edges: DataFrame, driverEdgeLimit: Long = -1L): DataFrame = {
-    val edgeLimit =
-      if (driverEdgeLimit >= 0) driverEdgeLimit else graphDriverEdgeLimit(edges)
-    // driver regime (the closure/CC pattern): collect the raw edge rows
-    // under the cap (limit(cap+1) detects overflow in one job), close
-    // locally, and filter redundant edges on the driver — an edge (u,v) is
-    // redundant iff some OTHER parent p of u reaches v through the closure,
-    // byte-identical to the distributed semi-join below. Only for bare
-    // (src, dst) long tables: extra columns or other types keep the
-    // distributed plan (whose anti-join preserves them).
-    if (edgeLimit > 0 && edges.columns.sameElements(Array("src", "dst")) &&
-        isLongLong(edges)) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val cap = math.min(edgeLimit, Int.MaxValue - 2L).toInt
-      val raw = edges.limit(cap + 1).as[(Long, Long)].collect()
-      if (raw.length <= cap) {
-        localClosure(raw.distinct, graphDriverClosureLimit(edges)) match {
-          case Some(pairs) =>
-            val anc = new java.util.HashMap[Long, java.util.HashSet[Long]]()
-            pairs.foreach { case (n, a) =>
-              anc.computeIfAbsent(n, _ => new java.util.HashSet[Long]()).add(a)
-            }
-            val parents = new java.util.HashMap[Long, java.util.ArrayList[Long]]()
-            raw.distinct.foreach { case (s, d) =>
-              parents.computeIfAbsent(s, _ => new java.util.ArrayList[Long]()).add(d)
-            }
-            def redundant(u: Long, v: Long): Boolean = {
-              val ps = parents.get(u)
-              var i = 0
-              while (i < ps.size()) {
-                val p = ps.get(i)
-                if (p != v) {
-                  val s = anc.get(p)
-                  if (s != null && s.contains(v)) return true
-                }
-                i += 1
-              }
-              false
-            }
-            // filter the RAW rows: duplicates and row order survive exactly
-            // as the distributed left_anti keeps them
-            return localPairsDF(spark,
-              raw.filter { case (u, v) => !redundant(u, v) }, "src", "dst")
-          case None => () // closure over the cap: distributed path below
-        }
+    * other parent p of u reaches v through the closure. Bare (src, dst)
+    * tables within `driverEdgeLimit` close and filter on the driver; extra
+    * columns keep the distributed plan, whose anti-join preserves them. */
+  def transitiveReduction(edges: DataFrame,
+                          driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+    val bare = edges.columns.sameElements(Array("src", "dst"))
+    val local = if (bare) driverEdges(edges, driverEdgeLimit) else None
+    local.flatMap { case (src, dst) => localReduction(edges.sparkSession, src, dst) }
+      .getOrElse {
+        // a probed table stays distributed (over the edge cap, or its
+        // closure over the pair cap): its closure must not probe again
+        val (closure, closureCount) = ancestorClosureCounted(edges,
+          driverEdgeLimit = if (bare) 0L else driverEdgeLimit)
+        // 2+hop reachability: first hop through a parent, then closure-or-self
+        val viaParent = edges.as("e1")
+          .join(edges.as("e2"), col("e1.src") === col("e2.src") && col("e1.dst") =!= col("e2.dst"))
+          .select(col("e1.src").as("src"), col("e1.dst").as("dst"), col("e2.dst").as("mid"))
+        val redundant = viaParent
+          .join(hinted(closure, closureCount),
+            viaParent("mid") === closure("node") && viaParent("dst") === closure("anc"),
+            "left_semi")
+          .select(col("src"), col("dst")).distinct()
+        edges.join(redundant, Seq("src", "dst"), "left_anti")
       }
+  }
+
+  /** Driver twin of [[transitiveReduction]]: each node's ancestor range of
+    * the local closure is sorted in place, and an edge (u,v) is dropped iff
+    * some OTHER parent p of u has v in its range (binary search). The RAW
+    * rows are filtered, so duplicates and row order survive exactly as the
+    * distributed left_anti keeps them. None when the closure is over
+    * [[DriverClosureLimit]]. */
+  private def localReduction(spark: SparkSession, src: Array[Long],
+                             dst: Array[Long]): Option[DataFrame] = {
+    val ids = sortedIds(src, dst)
+    val up = new Adjacency(ids, src, dst)
+    localClosure(ids, up, DriverClosureLimit).map { case (anc, start) =>
+      for (v <- ids.indices) java.util.Arrays.sort(anc, start(v), start(v + 1))
+      def redundant(u: Int, v: Long): Boolean =
+        (up.off(u) until up.off(u + 1)).exists { j =>
+          val p = up.tgt(j)
+          ids(p) != v && java.util.Arrays.binarySearch(anc, start(p), start(p + 1), v) >= 0
+        }
+      val keep = Array.range(0, src.length).filter(i => !redundant(slot(ids, src(i)), dst(i)))
+      localDF(spark, "src" -> keep.map(src), "dst" -> keep.map(dst))
     }
-    val (closure, closureCount) = ancestorClosureCounted(edges)
-    // 2+hop reachability: first hop through a parent, then closure-or-self
-    val viaParent = edges.as("e1")
-      .join(edges.as("e2"), col("e1.src") === col("e2.src") && col("e1.dst") =!= col("e2.dst"))
-      .select(col("e1.src").as("src"), col("e1.dst").as("dst"), col("e2.dst").as("mid"))
-    val redundant = viaParent
-      .join(hinted(closure, closureCount),
-        viaParent("mid") === closure("node") && viaParent("dst") === closure("anc"),
-        "left_semi")
-      .select(col("src"), col("dst")).distinct()
-    edges.join(redundant, Seq("src", "dst"), "left_anti")
   }
 
   /** Distributed `reduce_subset` (G9, taxonomy.py:306-336): drop every
@@ -624,24 +570,24 @@ object GraphOps {
     space
   }
 
-  /** Min-id union-find over an edge array — the driver-regime twin of the
-    * distributed fixpoint below (one implementation, shared with the
-    * pipeline's canonicalize). Returns node → min-id-of-component for every
-    * node whose root differs from itself. */
-  private[graft] def unionFindMinId(pairs: Array[(Long, Long)]): Map[Long, Long] = {
-    val index = scala.collection.mutable.LongMap.empty[Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def slot(x: Long): Int = index.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-    val dense = pairs.map { case (a, b) => (slot(a), slot(b)) }
-    val uf = new MinIdUnionFind(ids.toArray)
-    for ((a, b) <- dense) uf.union(a, b)
-    uf.merges
+  /** Min-id union-find over the pairs `(a(i), b(i))`, indexed by
+    * `ids = sortedIds(a, b)` — the driver twin of the distributed
+    * fixpoint below. */
+  private def unionAll(ids: Array[Long], a: Array[Long], b: Array[Long]): MinIdUnionFind = {
+    val uf = new MinIdUnionFind(ids)
+    for (i <- a.indices) uf.union(slot(ids, a(i)), slot(ids, b(i)))
+    uf
   }
+
+  /** node → min-id-of-component for every node of the pairs `(a(i), b(i))`
+    * whose component minimum is another node. */
+  private[graft] def unionFindMinId(a: Array[Long], b: Array[Long]): Map[Long, Long] =
+    unionAll(sortedIds(a, b), a, b).merges
 
   /** Union-find over the dense slots `0 until ids.length`, each component
     * rooted at its member with the smallest id — the one find/union behind
-    * [[unionFindMinId]] and the pipeline's driver canonicalize, which
-    * unions while it scans LSH buckets. */
+    * [[connectedComponents]]' driver regime and the pipeline's driver
+    * canonicalize, which unions while it scans LSH buckets. */
   private[graft] final class MinIdUnionFind(ids: Array[Long]) {
     private val parent = Array.tabulate(ids.length)(identity)
 
@@ -676,14 +622,11 @@ object GraphOps {
     * GraphFrames/RDD dependency; SURVEY.md §4.3). Returns (node, component)
     * with component = min node id of the component.
     *
-    * Regime switch (the pipeline-canonicalize pattern, BENCH §9 round 5:
-    * profiling caught the distributed fixpoint paying ~100 s of job
-    * overhead on a handful of pairs): an edge set whose EXACT measured
-    * count is within `driverPairLimit` is collected (≤ ~16 MB at the 1M
-    * default) and solved with the shared union-find — identical output by
-    * the equivalence test — while larger graphs run the distributed
-    * fixpoint. Pass `driverPairLimit = 0` to force the distributed path
-    * (the pipeline does, after its own dispatch).
+    * Regime switch (BENCH §9 round 5: profiling caught the distributed
+    * fixpoint paying ~100 s of job overhead on a handful of pairs): a pair
+    * set within `driverEdgeLimit` rows is solved with the driver union-find
+    * — identical output by the equivalence test — while larger sets run the
+    * distributed fixpoint.
     *
     * Distributed round structure (each round strictly lowers some label or
     * the algorithm has converged): one edge-propagation (the only
@@ -700,73 +643,70 @@ object GraphOps {
     * decimal(38,0) cannot overflow at any feasible node count × id
     * range). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-                          driverPairLimit: Long = 1000000L): DataFrame =
-    connectedComponentsCounted(pairs, maxIter, driverPairLimit)._1
+                          driverEdgeLimit: Long = DriverEdgeLimit): DataFrame =
+    connectedComponentsCounted(pairs, maxIter, driverEdgeLimit)._1
 
   /** [[connectedComponents]] plus the exact label-row count (for the
     * caller's own adaptive broadcast decision). */
   private def connectedComponentsCounted(pairs: DataFrame, maxIter: Int,
-                                         driverPairLimit: Long): (DataFrame, Long) = {
-    val spark = pairs.sparkSession
+                                         driverEdgeLimit: Long): (DataFrame, Long) = {
     val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .localCheckpoint(true)
-    val nPairs = p.count()
-    if (driverPairLimit > 0 && nPairs <= driverPairLimit) {
-      import spark.implicits._
-      val arr = p.as[(Long, Long)].collect()
-      val roots = unionFindMinId(arr)
-      val out = arr.iterator.flatMap(t => Iterator(t._1, t._2)).toArray.distinct
-        .map(n => (n, roots.getOrElse(n, n)))
-      (spark.createDataFrame(out.toSeq).toDF("node", "component"), out.length.toLong)
-    } else {
-      val sym = p
-        .union(p.select(col("b").as("a"), col("a").as("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var labels = sym.groupBy(col("a").as("node"))
-        .agg(least(min(col("b")), col("a")).as("comp"))
-        .localCheckpoint(true)
-      val nLabels = labels.count()
-      def labelSum(df: DataFrame): BigDecimal = {
-        val r = df.agg(sum(col("comp").cast("decimal(38,0)")).as("s")).head()
-        BigDecimal(r.getDecimal(0))
-      }
-      var prevSum = labelSum(labels)
-      var i = 0
-      var converged = false
-      while (i < maxIter && !converged) {
-        // propagate the min label across edges (the round's one aggregation)
-        val viaEdges = sym.as("e")
-          .join(hinted(labels, nLabels).as("l"), col("e.b") === col("l.node"))
-          .groupBy(col("e.a").as("node")).agg(min(col("l.comp")).as("nbrComp"))
-        val prop = labels.join(hinted(viaEdges, nLabels), Seq("node"), "left")
-          .select(col("node"),
-            least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
-        // pointer jumping: comp(n) <- comp(comp(n)), applied twice per round
-        def jump(d: DataFrame): DataFrame = d.as("p")
-          .join(hinted(d.select(col("node").as("cnode"), col("comp").as("ccomp")), nLabels).as("q"),
-            col("p.comp") === col("q.cnode"), "left")
-          .select(col("p.node").as("node"),
-            least(col("p.comp"), coalesce(col("q.ccomp"), col("p.comp"))).as("comp"))
-        val jumped = jump(jump(prop)).localCheckpoint(true)
-        val s = labelSum(jumped)
-        converged = s == prevSum // monotone: equal sum ⇔ no label moved ⇔ fixpoint
-        prevSum = s
-        labels = jumped
-        i += 1
-      }
-      sym.unpersist()
-      require(converged, s"connectedComponents did not converge in $maxIter " +
-        "pointer-jumping rounds — raise maxIter (silently-partial components " +
-        "would merge wrong canonicalization clusters)")
-      (labels.select(col("node"), col("comp").as("component")), nLabels)
+    driverEdges(p, driverEdgeLimit) match {
+      case Some((a, b)) =>
+        val ids = sortedIds(a, b)
+        val uf = unionAll(ids, a, b)
+        val component = Array.tabulate(ids.length)(i => ids(uf.find(i)))
+        (localDF(pairs.sparkSession, "node" -> ids, "component" -> component), ids.length.toLong)
+      case None =>
+        val pc = p.localCheckpoint(true)
+        val sym = pc
+          .union(pc.select(col("b").as("a"), col("a").as("b")))
+          .distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        var labels = sym.groupBy(col("a").as("node"))
+          .agg(least(min(col("b")), col("a")).as("comp"))
+          .localCheckpoint(true)
+        val nLabels = labels.count()
+        def labelSum(df: DataFrame): BigDecimal = {
+          val r = df.agg(sum(col("comp").cast("decimal(38,0)")).as("s")).head()
+          BigDecimal(r.getDecimal(0))
+        }
+        var prevSum = labelSum(labels)
+        var i = 0
+        var converged = false
+        while (i < maxIter && !converged) {
+          // propagate the min label across edges (the round's one aggregation)
+          val viaEdges = sym.as("e")
+            .join(hinted(labels, nLabels).as("l"), col("e.b") === col("l.node"))
+            .groupBy(col("e.a").as("node")).agg(min(col("l.comp")).as("nbrComp"))
+          val prop = labels.join(hinted(viaEdges, nLabels), Seq("node"), "left")
+            .select(col("node"),
+              least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
+          // pointer jumping: comp(n) <- comp(comp(n)), applied twice per round
+          def jump(d: DataFrame): DataFrame = d.as("p")
+            .join(hinted(d.select(col("node").as("cnode"), col("comp").as("ccomp")), nLabels).as("q"),
+              col("p.comp") === col("q.cnode"), "left")
+            .select(col("p.node").as("node"),
+              least(col("p.comp"), coalesce(col("q.ccomp"), col("p.comp"))).as("comp"))
+          val jumped = jump(jump(prop)).localCheckpoint(true)
+          val s = labelSum(jumped)
+          converged = s == prevSum // monotone: equal sum ⇔ no label moved ⇔ fixpoint
+          prevSum = s
+          labels = jumped
+          i += 1
+        }
+        sym.unpersist()
+        require(converged, s"connectedComponents did not converge in $maxIter " +
+          "pointer-jumping rounds — raise maxIter (silently-partial components " +
+          "would merge wrong canonicalization clusters)")
+        (labels.select(col("node"), col("comp").as("component")), nLabels)
     }
   }
 
   /** Components including isolated nodes: every node maps to min(reachable). */
   def componentsWithIsolated(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    val (cc, nCc) = connectedComponentsCounted(pairs, 25, 1000000L)
+    val (cc, nCc) = connectedComponentsCounted(pairs, 25, DriverEdgeLimit)
     nodes.select(col("id").cast("long").as("node"))
       .join(hinted(cc, nCc), Seq("node"), "left")
       .select(col("node"), coalesce(col("component"), col("node")).as("component"))

@@ -42,7 +42,7 @@ class GraphTwinSpec extends SparkSpecBase {
     assert(e1.getMessage.contains("did not converge"))
     val chainNodes = (1L to 5L).map(n => (n, s"n$n")).toDF("id", "label")
     val e2 = intercept[IllegalArgumentException] {
-      GraphOps.depths(chainNodes, chain, maxIter = 2, driverEdgeLimit = 0L).count()
+      GraphOps.depths(chainNodes, chain, maxIter = 2).count()
     }
     assert(e2.getMessage.contains("did not converge"))
     // convergent inputs are unaffected (both regimes)
@@ -60,15 +60,11 @@ class GraphTwinSpec extends SparkSpecBase {
     // (self-pairs via reachability)
     val dag = Seq((10L, 1L), (11L, 1L), (12L, 10L), (12L, 11L), (12L, 1L),
       (13L, 12L), (13L, 1L), (13L, 12L)).toDF("src", "dst")
-    val nodes = Seq(1L, 10L, 11L, 12L, 13L, 99L).map(n => (n, s"n$n")).toDF("id", "label")
     def rows(df: DataFrame) = df.as[(Long, Long)].collect().toSeq.sorted
     assert(rows(GraphOps.ancestorClosure(dag)) ==
       rows(GraphOps.ancestorClosure(dag, driverEdgeLimit = 0L)))
     assert(rows(GraphOps.transitiveReduction(dag)) ==
       rows(GraphOps.transitiveReduction(dag, driverEdgeLimit = 0L)))
-    assert(GraphOps.depths(nodes, dag).as[(Long, Int)].collect().toSeq.sorted ==
-      GraphOps.depths(nodes, dag, driverEdgeLimit = 0L)
-        .as[(Long, Int)].collect().toSeq.sorted)
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
     assert(rows(GraphOps.ancestorClosure(cyc)) ==
       rows(GraphOps.ancestorClosure(cyc, driverEdgeLimit = 0L)))
@@ -89,7 +85,7 @@ class GraphTwinSpec extends SparkSpecBase {
       assert(GraphOps.leavesOfEdgeNodes(e).as[Long].collect().toSeq.sorted ==
         GraphOps.leaves(ids, e).as[Long].collect().toSeq.sorted)
       assert(GraphOps.depthsOfEdgeNodes(e).as[(Long, Int)].collect().toSeq.sorted ==
-        GraphOps.depths(ids, e, driverEdgeLimit = 0L)
+        GraphOps.depths(ids, e)
           .as[(Long, Int)].collect().toSeq.sorted)
       // over-cap fallback of the specialized forms equals the fast path
       assert(GraphOps.leavesOfEdgeNodes(e, driverEdgeLimit = 1L)
@@ -99,6 +95,62 @@ class GraphTwinSpec extends SparkSpecBase {
         .as[(Long, Int)].collect().toSeq.sorted ==
         GraphOps.depthsOfEdgeNodes(e).as[(Long, Int)].collect().toSeq.sorted)
     }
+  }
+
+  /** Random edge table (child, parent) in the PropertySpec style: two
+    * disjoint components (ids offset by 1000), 1-3 parents per non-root
+    * node drawn from lower ids (a DAG), duplicated rows and — unless
+    * `dag` — back edges that close cycles. */
+  private def genEdges(rng: scala.util.Random, dag: Boolean): Seq[(Long, Long)] = {
+    def component(base: Long): Seq[(Long, Long)] = {
+      val n = 4 + rng.nextInt(9)
+      val down = for (i <- 1 until n; _ <- 0 until 1 + rng.nextInt(3))
+        yield (base + i, base + rng.nextInt(i))
+      val back = if (dag) Nil else Seq.fill(1 + rng.nextInt(2)) {
+        val lo = rng.nextInt(n - 1)
+        (base + lo, base + lo + 1 + rng.nextInt(n - 1 - lo))
+      }
+      down ++ back
+    }
+    val e = component(0L) ++ component(1000L)
+    rng.shuffle(e ++ Seq.fill(3)(e(rng.nextInt(e.length))))
+  }
+
+  test("driver twins equal the forced-distributed fixpoints on random graphs") {
+    val rng = new scala.util.Random(7L)
+    def rows2(df: DataFrame) = df.as[(Long, Long)].collect().toSeq.sorted
+    def depths(df: DataFrame) = df.as[(Long, Int)].collect().toSeq.sorted
+    // toy graphs: one shuffle partition keeps the several hundred
+    // distributed fixpoint jobs within the test's time budget
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try for (it <- 0 until 10) {
+      val dag = it % 2 == 0
+      val e = genEdges(rng, dag).toDF("src", "dst")
+      val pairs = e.select(col("src").as("a"), col("dst").as("b"))
+      withClue(s"graph $it (dag=$dag): ") {
+        assert(rows2(GraphOps.ancestorClosure(e)) ==
+          rows2(GraphOps.ancestorClosure(e, driverEdgeLimit = 0L)))
+        assert(GraphOps.leavesOfEdgeNodes(e).as[Long].collect().toSeq.sorted ==
+          GraphOps.leavesOfEdgeNodes(e, driverEdgeLimit = 0L).as[Long].collect().toSeq.sorted)
+        assert(depths(GraphOps.depthsOfEdgeNodes(e)) ==
+          depths(GraphOps.depthsOfEdgeNodes(e, driverEdgeLimit = 0L)))
+        assert(rows2(GraphOps.connectedComponents(pairs)) ==
+          rows2(GraphOps.connectedComponents(pairs, driverEdgeLimit = 0L)))
+        if (dag) assert(rows2(GraphOps.transitiveReduction(e)) ==
+          rows2(GraphOps.transitiveReduction(e, driverEdgeLimit = 0L)))
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
+
+  test("driver-regime components above 100k rows are not a LocalRelation") {
+    // a LocalRelation serializes whole into every plan that uses it; the
+    // other local outputs switch to an RDD above 100k rows, and so must CC
+    val chain = spark.range(200000L).select(col("id").as("a"), (col("id") + 1).as("b"))
+    val cc = GraphOps.connectedComponents(chain)
+    assert(cc.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r
+    }.isEmpty, "driver-regime CC output is one LocalRelation")
+    assert(cc.count() == 200001L && cc.filter(col("component") =!= 0L).isEmpty)
   }
 
   test("distributed reduce_subset equals the driver twin (both directions)") {

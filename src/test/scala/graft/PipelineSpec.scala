@@ -313,40 +313,11 @@ class PipelineSpec extends SparkSpecBase {
     val models = KgPipeline.domainModels()
       .copy(emb = new CountingEmbedder(new HashNgramEmbedder(64)))
     val sc = spark.sparkContext
-    val tag = "graft.test.canon"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.put(e.jobId, Option(e.properties).flatMap(p => Option(p.getProperty(tag))).getOrElse(""))
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        ended.add(e.jobId); ()
-      }
-    }
-    sc.addSparkListener(listener)
     CountingEmbedder.reset()
-    val res =
-      try {
-        sc.setLocalProperty(tag, "canon")
-        val r = KgPipeline.canonicalize(spark, taxo, concepts, models, 0.999,
-          new graft.retrieve.SnapshotEmbeddings(64))
-        // the listener bus is FIFO: once this marker job's end is seen,
-        // every job canonicalize submitted has been counted
-        sc.setLocalProperty(tag, "marker")
-        sc.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        def markerDone = jobs.entrySet().stream()
-          .anyMatch(e => e.getValue == "marker" && ended.contains(e.getKey))
-        while (!markerDone) {
-          assert(System.nanoTime() < deadline, "listener bus did not drain")
-          Thread.sleep(5)
-        }
-        r
-      } finally {
-        sc.setLocalProperty(tag, null)
-        sc.removeSparkListener(listener)
-      }
-    val canonJobs = jobs.values().stream().filter(_ == "canon").count()
+    val (res, canonJobs) = jobsDuring {
+      KgPipeline.canonicalize(spark, taxo, concepts, models, 0.999,
+        new graft.retrieve.SnapshotEmbeddings(64))
+    }
     assert(!res.lineage.exists(_.stage == "canon_pairs"), "driver regime did not run")
     assert(canonJobs <= sc.defaultParallelism + 2,
       s"$canonJobs jobs for a driver-regime canonicalize")
@@ -572,14 +543,15 @@ class PipelineSpec extends SparkSpecBase {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 14L), (14L, 11L),
       (100L, 50L), (50L, 60L), (60L, 100L), (8L, 8L))
-    // driverPairLimit = 0 forces the DISTRIBUTED fixpoint: with the round-6
+    // driverEdgeLimit = 0 forces the DISTRIBUTED fixpoint: with the round-6
     // regime switch the default path would union-find on the driver and
     // this test would compare union-find to itself
     val dist = graft.spark.GraphOps.connectedComponents(pairs.toDF("a", "b"),
-        driverPairLimit = 0L)
+        driverEdgeLimit = 0L)
       .filter(col("node") =!= col("component"))
       .as[(Long, Long)].collect().toMap
-    assert(graft.spark.GraphOps.unionFindMinId(pairs.toArray) == dist)
+    val (a, b) = pairs.toArray.unzip
+    assert(graft.spark.GraphOps.unionFindMinId(a, b) == dist)
   }
 
   test("connectedComponents driver regime equals the distributed fixpoint") {
@@ -592,7 +564,7 @@ class PipelineSpec extends SparkSpecBase {
     val df = pairs.toDF("a", "b")
     val viaDriver = graft.spark.GraphOps.connectedComponents(df)
       .as[(Long, Long)].collect().toSet
-    val viaFixpoint = graft.spark.GraphOps.connectedComponents(df, driverPairLimit = 0L)
+    val viaFixpoint = graft.spark.GraphOps.connectedComponents(df, driverEdgeLimit = 0L)
       .as[(Long, Long)].collect().toSet
     assert(viaDriver == viaFixpoint)
     assert(viaDriver.nonEmpty)
@@ -604,7 +576,8 @@ class PipelineSpec extends SparkSpecBase {
     // multi-minute stall at this size, milliseconds with compression
     val n = 100000
     val pairs = Array.tabulate(n)(i => ((n - 1 - i).toLong, (n - i).toLong))
-    val m = graft.spark.GraphOps.unionFindMinId(pairs)
+    val (a, b) = pairs.unzip
+    val m = graft.spark.GraphOps.unionFindMinId(a, b)
     assert(m.size == n)
     assert((1 to n).forall(k => m(k.toLong) == 0L))
   }

@@ -15,6 +15,17 @@ class PlanSpec extends SparkSpecBase {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  test("graph queries stay within their Spark job counts") {
+    // upper bounds at sf0.001, where every graph query runs its driver
+    // regime: a twin that probes twice, or checkpoints and counts its
+    // input before choosing a regime, submits more jobs and fails here
+    for ((q, bound) <- Seq("q19_taxo_ancestors" -> 9, "q20_taxo_leaves" -> 9,
+        "q21_taxo_depths" -> 9, "q22_taxo_tr" -> 9, "q23_components" -> 7)) {
+      val (_, jobs) = jobsDuring(SparkEntry.queries(q)(spark, dir).collect())
+      assert(jobs <= bound, s"$q submitted $jobs Spark jobs (bound $bound)")
+    }
+  }
+
   test("q05 pushes filters into the parquet scan") {
     val p = plan("q05_filter_pushdown")
     assert(p.contains("PushedFilters"), "no pushed filters section")
